@@ -1,40 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.json
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Round-9 bisect of the r8 "regression": interleaving (below)
-      // separates a query's timed runs by a full 229-query pass, and the
-      // DEFAULT whole-stage-codegen compile cache holds only 100 classes
-      // (static conf) — so every timed run paid Janino recompilation
-      // (~0.1–0.5 s on sub-second queries), which back-to-back r7 runs
-      // never did. Quiet-box evidence: q_agg_distinct 0.252 s (r7,
-      // back-to-back) → 0.766 s (interleaved, 100-entry cache) → again
-      // ~r7-level with the cache sized for the workload. A production
-      // cluster serving hundreds of query shapes sizes this cache the
-      // same way; steady-state latency is the quantity under test, not
-      // JIT compile time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every unpartitioned window in this library is a bounded-stats frame
-    // (gene-stats ≤~30k rows, ≤1024-bucket histograms — each bound argued
-    // in scaladoc at its use site), so WindowExec's per-plan WARN is pure
-    // noise here, and it would eat the driver's 2000-char stdout tail
-    // (round-7 judge finding #4). A constant partitionBy can't silence it
-    // (Catalyst folds the key away) — drop exactly that logger to ERROR.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Harness.session()
     // Jitter-proof methodology (round-8 judge finding: a single loaded
     // 4-run window distorted q_agg_hash 0.26s→1.50s while the same code
     // measured fine hours earlier). Instead of running each query's
@@ -47,10 +17,7 @@ object Bench {
     // unloaded time. Cost is identical to the old scheme: 4 runs/query.
     // /proc/loadavg before/after is recorded so a loaded machine is
     // visible in the artifact instead of masquerading as a regression.
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
-      catch { case NonFatal(_) => "" }
-    val loadBefore = loadavg()
+    val loadBefore = Harness.loadavg()
     // Self-certification (round-11 judge "wrong" #2): a loaded box keeps
     // sneaking into the final driver pass and masquerading as the round's
     // perf statement. Stamp quiet=false PROMINENTLY (first field of both
@@ -125,27 +92,16 @@ object Bench {
       failures.getOrElseUpdate("_fatal",
         s"${fatal.getClass.getSimpleName}: ${Option(fatal.getMessage).getOrElse("").take(300)}")
     }
-    val loadAfter = loadavg()
+    val loadAfter = Harness.loadavg()
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
     val nFailed = results.values.count(_ < 0)
     // Full-precision per-query detail goes to the file sink.
-    // Full JSON string escape — Spark exception messages are multi-line;
-    // raw \n/\r/\t in a value breaks the one-line format the driver parses.
-    def escJ(p: String): String = p.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qsFull = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qsFull = results.map { case (k, v) => json(k) + ":" + v }
       .mkString("{", ",", "}")
     val failJson = failures.map { case (k, v) =>
-      s"\"${escJ(k)}\":\"${escJ(v)}\"" }.mkString("{", ",", "}")
+      s"${json(k)}:${json(v)}" }.mkString("{", ",", "}")
     val fullJson =
-      s"""{"quiet":$quiet,"metric":"total","value":$total,"unit":"sec","method":"min_of_$timedPasses-interleaved_passes","suffix_index_build_sec":$suffixIndexSec,"loadavg_before":"${escJ(loadBefore)}","loadavg_after":"${escJ(loadAfter)}","n_failed":$nFailed,"failures":$failJson,"queries":$qsFull,"sf":"$sfDir"}"""
+      s"""{"quiet":$quiet,"metric":"total","value":$total,"unit":"sec","method":"min_of_$timedPasses-interleaved_passes","suffix_index_build_sec":$suffixIndexSec,"loadavg_before":${json(loadBefore)},"loadavg_after":${json(loadAfter)},"n_failed":$nFailed,"failures":$failJson,"queries":$qsFull,"sf":${json(sfDir)}}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_OUT.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -163,12 +119,9 @@ object Bench {
       "q_agg_distinct", "q_json_funcs", "q_stream_tumbling", "q_dedup_exact",
       "q_sc_normalize_log1p", "q_similarity_knn")
     val qsHead = headline.flatMap(k => results.get(k).map(v =>
-      s"\"" + k + "\":" + (math.rint(v * 1000) / 1000))).mkString("{", ",", "}")
-    // JSON-escape interpolated paths: an env-provided path containing a
-    // quote or backslash must not break the driver's one-line parser
-    val json =
-      s"""{"quiet":$quiet,"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","queries":$qsHead,"n_queries":${results.size},"n_failed":$nFailed,"load":"${escJ(loadBefore)}>${escJ(loadAfter)}","detail":"${escJ(outPath)}","sf":"${escJ(sfDir)}"}"""
-    println(json)
+      json(k) + ":" + (math.rint(v * 1000) / 1000))).mkString("{", ",", "}")
+    println(
+      s"""{"quiet":$quiet,"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","queries":$qsHead,"n_queries":${results.size},"n_failed":$nFailed,"load":${json(s"$loadBefore>$loadAfter")},"detail":${json(outPath)},"sf":${json(sfDir)}}""")
     spark.stop()
   }
 }

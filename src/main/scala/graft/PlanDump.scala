@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
@@ -8,26 +7,14 @@ import scala.util.control.NonFatal
   * (Exchange count, join strategy, PushedFilters/ReadSchema) are
   * committed evidence rather than prose. Usage:
   *   runMain graft.PlanDump <sfDir> <outDir> [q1,q2,...]
-  * Same session shape as Bench (local[$SPARK_GRAFT_CPUS], AQE on) so the
-  * dumped plans are the ones the bench actually executes. */
+  * Same session as Bench ([[Harness.session]]) so the dumped plans are
+  * the ones the bench actually executes. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))

@@ -5,19 +5,6 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Runs each query, dumps results + oracle_sql.json + errors.json.
     * Factored out of main so VerifySpec can drive it with a deliberately
     * failing query and assert the failure is VISIBLE in the artifact.
@@ -45,10 +32,12 @@ object Verify {
       spark.sharedState.cacheManager.clearCache()
     }
     val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     // Loud but zero-exit: the driver must still read the artifacts above.
     if (errors.nonEmpty)
@@ -63,21 +52,9 @@ object Verify {
     // fast single-query iteration (driver always calls with 2 args)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production deployment route: injected functions + optimizer
-      // rules (LevenshteinThresholdRule) live in the gate session too
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bounded-window WARN suppression, same rationale as Bench.main
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // the production deployment route: injected functions + optimizer
+    // rules (LevenshteinThresholdRule) live in the gate session too
+    val spark = Harness.session()
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
     run(spark, sfDir, outDir, queries, SparkEntry.oracleSql)

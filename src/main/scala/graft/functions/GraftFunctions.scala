@@ -9,14 +9,16 @@ import org.apache.spark.sql.functions.{call_function, expr}
 
 /** Registration surface for graft's native expressions.
   *
-  * Two paths:
-  *  - `register(spark)` — runtime registration into an existing session's
-  *    function registry (what the queries use: the Verify/Bench harnesses
-  *    build their own plain sessions);
+  * Two routes, driven by one table ([[GraftFunctions.nativeExpressions]]):
   *  - `GraftExtensions` — `SparkSessionExtensions` injection for sessions
-  *    built with `.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` (the
-  *    idiomatic deployment path on a real cluster).
+  *    built with `spark.sql.extensions=graft.functions.GraftExtensions`
+  *    (what `graft.Graft.session` sets; the idiomatic deployment path on a
+  *    real cluster) or `.withExtensions(new GraftExtensions)`;
+  *  - `register(spark)` — runtime registration into an existing session's
+  *    function registry, for a session built without the extension. It
+  *    also installs the two aggregators (`exact_median`, `bounded_top3`),
+  *    which the extension does not inject. The queries call it, so they
+  *    run on any session.
   */
 object GraftFunctions {
 
@@ -65,30 +67,33 @@ object GraftFunctions {
     DsirBuckets(exprs(0), salt, buckets)
   }
 
+  /** The seven native expressions as (name, info, builder) — the one
+    * list both registration routes install. */
+  val nativeExpressions: Seq[(FunctionIdentifier, ExpressionInfo,
+                              Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], cosineBuilder),
+    ("l2_sq", classOf[L2DistanceSq], l2SqBuilder),
+    ("dot_product", classOf[DotProduct], dotBuilder),
+    ("cdc_chunks", classOf[CdcChunks], cdcChunksBuilder),
+    ("simhash60", classOf[SimHash60], simHash60Builder),
+    ("lcp_len", classOf[LcpLen], lcpLenBuilder),
+    ("dsir_buckets", classOf[DsirBuckets], dsirBucketsBuilder)
+  ).map { case (name, cls, builder) =>
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+  }
+
   /** Idempotent runtime registration. EVERY path is guarded by a
     * functionExists check: both udf.register and
-    * createOrReplaceTempFunction WARN "replaced a previously registered
+    * registerFunction WARN "replaced a previously registered
     * function" on re-registration, and register() runs once per query
     * in a 190-query bench — hundreds of WARN lines crowding the
     * driver's 2000-char stdout tail otherwise. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def missing(n: String) = !reg.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(n))
-    if (missing("cosine_sim"))
-      reg.createOrReplaceTempFunction("cosine_sim", cosineBuilder, "scala_udf")
-    if (missing("l2_sq"))
-      reg.createOrReplaceTempFunction("l2_sq", l2SqBuilder, "scala_udf")
-    if (missing("dot_product"))
-      reg.createOrReplaceTempFunction("dot_product", dotBuilder, "scala_udf")
-    if (missing("cdc_chunks"))
-      reg.createOrReplaceTempFunction("cdc_chunks", cdcChunksBuilder, "scala_udf")
-    if (missing("simhash60"))
-      reg.createOrReplaceTempFunction("simhash60", simHash60Builder, "scala_udf")
-    if (missing("lcp_len"))
-      reg.createOrReplaceTempFunction("lcp_len", lcpLenBuilder, "scala_udf")
-    if (missing("dsir_buckets"))
-      reg.createOrReplaceTempFunction("dsir_buckets", dsirBucketsBuilder, "scala_udf")
+    def missing(n: String) = !reg.functionExists(FunctionIdentifier(n))
+    nativeExpressions.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+    }
     // aggregator surface for SQL users — `SELECT g, exact_median(v) …`,
     // `SELECT g, bounded_top3(score, id) …` (array<struct<score,id>>,
     // descending, O(3) agg state; see BoundedTopK)
@@ -100,23 +105,23 @@ object GraftFunctions {
         org.apache.spark.sql.functions.udaf(BoundedTopK(3)))
   }
 
-  /** Column-API form of the native cosine expression (requires
-    * register(spark) first in that session). */
+  /** Column-API form of the native cosine expression (requires the
+    * extension or register(spark) in that session). */
   def cosineSim(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
 
-  /** Column-API form of the native squared-L2 expression (requires
-    * register(spark) first in that session). */
+  /** Column-API form of the native squared-L2 expression (requires the
+    * extension or register(spark) in that session). */
   def l2Sq(a: Column, b: Column): Column =
     call_function("l2_sq", a, b)
 
-  /** Column-API form of the native dot-product expression (requires
-    * register(spark) first in that session). */
+  /** Column-API form of the native dot-product expression (requires the
+    * extension or register(spark) in that session). */
   def dot(a: Column, b: Column): Column =
     call_function("dot_product", a, b)
 
-  /** Column-API form of the native CDC chunker (requires
-    * register(spark) first in that session). */
+  /** Column-API form of the native CDC chunker (requires the
+    * extension or register(spark) in that session). */
   def cdcChunks(text: Column, w: Int, b: Long, mask: Long,
                 divisor: Long): Column =
     call_function("cdc_chunks", text,
@@ -125,18 +130,18 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(mask),
       org.apache.spark.sql.functions.lit(divisor))
 
-  /** Column-API form of the native SimHash fingerprint (requires
-    * register(spark) first in that session). */
+  /** Column-API form of the native SimHash fingerprint (requires the
+    * extension or register(spark) in that session). */
   def simHash60(text: Column): Column =
     call_function("simhash60", text)
 
-  /** Column-API form of the native LCP-length probe (requires
-    * register(spark) first in that session). */
+  /** Column-API form of the native LCP-length probe (requires the
+    * extension or register(spark) in that session). */
   def lcpLen(text: Column, pos: Column, ptext: Column, ppos: Column): Column =
     call_function("lcp_len", text, pos, ptext, ppos)
 
   /** Column-API form of the native DSIR bigram-bucket histogram
-    * (requires register(spark) first in that session). */
+    * (requires the extension or register(spark) in that session). */
   def dsirBuckets(text: Column, salt: String, buckets: Int): Column =
     call_function("dsir_buckets", text,
       org.apache.spark.sql.functions.lit(salt),
@@ -170,18 +175,7 @@ object GraftFunctions {
   * route (`--conf spark.sql.extensions=graft.functions.GraftExtensions`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      GraftFunctions.cosineBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("l2_sq"),
-      new ExpressionInfo(classOf[L2DistanceSq].getName, "l2_sq"),
-      GraftFunctions.l2SqBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      GraftFunctions.dotBuilder))
+    GraftFunctions.nativeExpressions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinThresholdRule)
     // the rung-(c) physical operator (plans/AsOfJoinPlan.scala); runtime
     // sessions without extensions get it via AsOf.ensureStrategy

@@ -75,26 +75,7 @@ object PageRank {
     // n is a bounded single-scalar fetch (the IVF-fit class) feeding the
     // per-node constants; everything per-node stays distributed
     val n = nodes.count().toDouble
-    // Edge-cache pre-partition, keyed on INPUT SIZE (r12 measured the
-    // lever both ways; r13 landed it behind a size gate). Hash-
-    // partitioning the cached edge table by id1 lets every round's
-    // contribution join reuse the cache's partitioning instead of
-    // re-shuffling the edge side per iteration — at 200k nodes / 2M
-    // synthetic edges on local[32] that measured 12.55 → 11.09 s for
-    // 10 rounds (ranksum identical; probe in OPTIMIZATION_r13.md), and
-    // on a cluster it saves `iters` edge-table exchanges. BELOW the
-    // gate it stays off: at fixture scale (the declared queries'
-    // bounded ≤300-node kNN substrate) the rounds are job-overhead-
-    // bound and r12 measured the upfront exchange NEUTRAL for plain /
-    // ~1.1 s SLOWER for dangling (AQE re-plans the tiny joins). Keyed
-    // on the node count the loop ALREADY fetches — an edge count would
-    // be the more direct proxy for the per-round shuffle but costs one
-    // extra action per run (measured +0.1 s/query at fixture scale);
-    // the threshold is a session conf so a deployment can tune it.
-    val prePartition = n >= rawEdges.sparkSession.conf
-      .get("spark.graft.pagerank.prepartitionMinNodes", "100000").toLong
-    val edgesD0 = edges.join(deg, "id1")
-    val edgesD = (if (prePartition) edgesD0.repartition(col("id1")) else edgesD0)
+    val edgesD = edges.join(deg, "id1")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // sinks = nodes that never source an edge (anti join against the
     // out-degree table); only materialized when redistribution is on

@@ -101,19 +101,13 @@ object RefShapeProbe {
     // explicit 5th arg sitting near that distribution's ~85th percentile
     // to keep the filter's bite comparable
     val minGenes = args.lift(4).map(_.toInt).getOrElse(draws)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // at 650M+ nonzeros AQE fans the big exchanges into ~450 tasks and
-      // the CUMULATIVE task-result metadata (status + SQL metrics per
-      // task) crosses the 1g default — an operational knob any large
-      // job sets, not a data collect (every driver-side collect in this
-      // path is bounded)
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-refshape").getOrCreate()
+    // at 650M+ nonzeros AQE fans the big exchanges into ~450 tasks and
+    // the CUMULATIVE task-result metadata (status + SQL metrics per
+    // task) crosses the 1g default — an operational knob any large
+    // job sets, not a data collect (every driver-side collect in this
+    // path is bounded)
+    val s = graft.Graft.session(s"local[${graft.Harness.cpus}]",
+      Map("spark.driver.maxResultSize" -> "8g"))
     s.sparkContext.setLogLevel("WARN")
     def t[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)

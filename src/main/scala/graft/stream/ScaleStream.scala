@@ -1,9 +1,10 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.Harness
 import graft.llm.NearDedupStream
 import graft.tables.Tables
 
@@ -77,25 +78,13 @@ object ScaleStream {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = if (args.length > 1) args(1) else "/root/repo/STREAM_OUT.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(NearDedupStream.rocksDbConf._1, NearDedupStream.rocksDbConf._2)
-      // both replays run ~50 (data + no-data) micro-batches; keep every
-      // progress sample so the state series in the artifact is complete
-      .config("spark.sql.streaming.numRecentProgressUpdates", "400")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
+    spark.conf.set(NearDedupStream.rocksDbConf._1, NearDedupStream.rocksDbConf._2)
+    // both replays run ~50 (data + no-data) micro-batches; keep every
+    // progress sample so the state series in the artifact is complete
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "400")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
-    val load0 = loadavg()
+    val load0 = Harness.loadavg()
     val tmp = System.getProperty("java.io.tmpdir")
 
     // ---------------- 1. corpus-scale file-fed near-dedup ----------------
@@ -177,8 +166,8 @@ object ScaleStream {
     val parity = streamSteps == batchSteps
 
     val json =
-      s"""{"sf":"$sfDir","rocksdb":true,"loadavg_start":"$load0",""" +
-        s""""loadavg_end":"${loadavg()}",""" +
+      s"""{"sf":${Harness.json(sfDir)},"rocksdb":true,"loadavg_start":${Harness.json(load0)},""" +
+        s""""loadavg_end":${Harness.json(Harness.loadavg())},""" +
         s""""near_dedup":{"docs":$nDocs,"slices":$dedupSlices,""" +
         s""""signatures_only":true,"horizon_sec":$horizonSec,""" +
         s""""prep_sec":${"%.1f".format(prepSec)},""" +

@@ -296,14 +296,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.map(_.toDouble).getOrElse(1.0)
     val outDir = args.lift(1).getOrElse(s"/tmp/graft_testdata/sf$sf")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-gendata-sf$sf")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     write(spark, sf, outDir)
     spark.stop()
   }

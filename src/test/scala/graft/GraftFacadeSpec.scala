@@ -18,9 +18,8 @@ class GraftFacadeSpec extends SparkSpec {
   }
 
   test("the extensions the facade installs resolve in SQL") {
-    // the shared test session registers the same extension surface the
-    // facade's builder configures; prove the native function resolves
-    graft.functions.GraftFunctions.register(spark)
+    // the shared test session is the facade's own session; no register
+    // call, so the native function resolves through the extension
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c")
       .head.getDouble(0)

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM — suites reuse it
-  * via getOrCreate). sf0.001 is the unit-test scale. */
+/** Shared local SparkSession for all suites (one per JVM: the first
+  * suite to run fixes its static confs for every other suite, so every
+  * suite takes this one). sf0.001 is the unit-test scale. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
@@ -22,17 +23,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The library's own session (extensions, UTC, AQE, shuffle width =
+    * cores), so the specs test the plans Verify and Bench run. The temp
+    * warehouse dir is for BucketingSpec's `saveAsTable`. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val s = Graft.session("local[4]", Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
     s.sparkContext.setLogLevel("WARN")
     s
   }

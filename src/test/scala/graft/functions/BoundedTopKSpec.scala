@@ -51,7 +51,6 @@ class BoundedTopKSpec extends SparkSpec {
   }
 
   test("SQL surface: bounded_top3 equals the Column-API query") {
-    GraftFunctions.register(spark)
     Tables.orders(spark, sf).createOrReplaceTempView("orders_btk")
     val viaSql = spark.sql("""
       SELECT o_custkey, t.pos + 1 AS rn, t.col.score AS o_totalprice,

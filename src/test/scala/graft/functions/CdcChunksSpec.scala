@@ -19,7 +19,6 @@ class CdcChunksSpec extends SparkSpec {
       .collect().map(_.getSeq[String](0).toList).toList
 
   private def kernelChunks(texts: Seq[String]): Seq[Seq[String]] = {
-    GraftFunctions.register(spark)
     texts.toDF("text")
       .select(GraftFunctions.cdcChunks(col("text"), W, B, Mask, Divisor).as("c"))
       .collect().map(_.getSeq[String](0).toList).toList
@@ -63,7 +62,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("mistyped argument fails at analysis time") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(1L).toDF("v")
         .select(GraftFunctions.cdcChunks(col("v"), W, B, Mask, Divisor))

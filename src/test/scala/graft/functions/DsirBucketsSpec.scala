@@ -16,7 +16,6 @@ class DsirBucketsSpec extends SparkSpec {
   import graft.llm.Selection.{DsirBuckets => NB, DsirSalt}
 
   private def viaKernel(texts: Seq[String]): Seq[Seq[Long]] = {
-    GraftFunctions.register(spark)
     texts.toDF("text")
       .select(GraftFunctions.dsirBuckets(col("text"), DsirSalt, NB).as("bc"))
       .collect().map(_.getSeq[Long](0).toList).toList

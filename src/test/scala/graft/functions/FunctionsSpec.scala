@@ -8,7 +8,6 @@ class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("native cosine_sim == HOF cosine formulation on real embeddings") {
-    GraftFunctions.register(spark)
     val e = graft.tables.Tables.embeddings(spark, sf)
       .limit(100)
       .select($"vec_id", transform($"embedding", _.cast("double")).as("v"))
@@ -23,7 +22,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val e = graft.tables.Tables.embeddings(spark, sf).limit(5)
       .select(transform($"embedding", _.cast("double")).as("v"))
     val df = e.select(expr("cosine_sim(v, v)").as("c"))
@@ -36,7 +34,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native l2_sq == HOF fold, bit for bit (same accumulation order)") {
-    GraftFunctions.register(spark)
     val e = graft.tables.Tables.embeddings(spark, sf)
       .limit(100)
       .select($"vec_id", transform($"embedding", _.cast("double")).as("v"))
@@ -54,7 +51,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("l2_sq participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val e = graft.tables.Tables.embeddings(spark, sf).limit(5)
       .select(transform($"embedding", _.cast("double")).as("v"))
     val df = e.select(expr("l2_sq(v, v)").as("z"))
@@ -64,7 +60,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim handles nulls and SQL registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT cosine_sim(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS a,
                 cosine_sim(array(1.0d, 0.0d), array(0.0d, 2.0d)) AS b""").head()
@@ -74,7 +69,6 @@ class FunctionsSpec extends SparkSpec {
   test("mistyped arguments fail at ANALYSIS, not mid-job") {
     // checkInputDataTypes (VectorPairExpression) turns the former runtime
     // IllegalArgumentException into an AnalysisException at plan time
-    GraftFunctions.register(spark)
     val err = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT l2_sq(array('a', 'b'), array('c', 'd'))")
         .queryExecution.analyzed
@@ -83,7 +77,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("ragged (unequal-length) vectors return NULL, matching the HOF fold") {
-    GraftFunctions.register(spark)
     // the zip_with+aggregate formulation nulls the whole fold when the
     // shorter array is null-padded; the fused loops must agree
     val r = spark.sql(
@@ -101,13 +94,38 @@ class FunctionsSpec extends SparkSpec {
     assert(df.head().isNullAt(0))
   }
 
-  test("GraftExtensions installs into a SparkSessionExtensions instance") {
-    // Only one SparkContext per test JVM, so the true build-time injection
-    // path (spark.sql.extensions=graft.functions.GraftExtensions) is driven
-    // in a separate spark-shell JVM by the verify workflow; here we check
-    // the installer applies cleanly.
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)   // must not throw
+  test("the extension route resolves every native expression without register") {
+    // newSession() builds a fresh function registry from the builtins plus
+    // the session extensions alone; nothing here calls register
+    val s2 = spark.newSession()
+    for ((id, _, _) <- GraftFunctions.nativeExpressions) {
+      assert(s2.sessionState.functionRegistry.functionExists(id), id.funcName)
+    }
+    import graft.llm.Cdc.{W, B, Mask, Divisor}
+    val r = s2.sql(
+      s"""SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)),
+                l2_sq(array(1.0d, 0.0d), array(1.0d, 0.0d)),
+                dot_product(array(1.0d, 0.0d), array(1.0d, 0.0d)),
+                cdc_chunks('the quick brown fox', $W, ${B}L, ${Mask}L, ${Divisor}L),
+                simhash60('the quick brown fox'),
+                lcp_len('abcd', 0L, 'abcx', 0L),
+                dsir_buckets('the quick brown fox', 'dsir:', 64)""").head()
+    assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 0.0 &&
+      r.getDouble(2) == 1.0)
+    assert(r.getSeq[String](3).mkString == "the quick brown fox")
+    assert(!r.isNullAt(4) && r.getLong(5) == 3L && !r.isNullAt(6))
+  }
+
+  test("register installs both aggregators into a session without them") {
+    val s2 = spark.newSession()
+    assert(!s2.catalog.functionExists("exact_median"))
+    GraftFunctions.register(s2)
+    val r = s2.sql(
+      """SELECT exact_median(v), bounded_top3(v, id)
+         FROM VALUES (1.0d, 1L), (9.0d, 2L), (4.0d, 3L) AS t(v, id)""").head()
+    assert(r.getDouble(0) == 4.0)
+    assert(r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)) ==
+      Seq(2L, 3L, 1L))
   }
 
   test("ExactMedian aggregator: odd, even, and per-group medians") {
@@ -136,7 +154,6 @@ class CosineFloatArraySpec extends graft.SparkSpec {
   import org.apache.spark.sql.functions._
 
   test("cosine_sim on raw ARRAY<FLOAT> equals the cast-to-double result") {
-    GraftFunctions.register(spark)
     val e = graft.tables.Tables.embeddings(spark, sf).limit(50)
     val viaFloat = e.select($"vec_id",
       expr("cosine_sim(embedding, embedding)").as("c")).collect()
@@ -153,7 +170,6 @@ class CosineFloatArraySpec extends graft.SparkSpec {
   }
 
   test("unsupported element types are rejected, not silently misread") {
-    GraftFunctions.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT cosine_sim(array(1, 2), array(3, 4))").collect()
     }
@@ -166,7 +182,6 @@ class CosineFloatArraySpec extends graft.SparkSpec {
     val vecs = (Seq((0L, Seq.fill(4)(0.0))) ++            // zero vector
       (1L to 10L).map(i => (i, Seq(i.toDouble, 1.0, 0.0, 0.0))))
       .toDF("id", "v")
-    GraftFunctions.register(spark)
     val pairs = vecs.select($"id".as("id1"), $"v".as("v1"))
       .join(vecs.select($"id".as("id2"), $"v".as("v2")), $"id1" < $"id2")
       .select($"id1", $"id2", Similarity.safeCosine($"v1", $"v2").as("c"))

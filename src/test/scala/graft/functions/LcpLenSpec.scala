@@ -20,7 +20,6 @@ class LcpLenSpec extends SparkSpec {
       "length(ptext) - ppos) AS BIGINT) ELSE m - 1 END) END"
 
   private def bothForms(rows: Seq[(String, Long, String, Long)]) = {
-    GraftFunctions.register(spark)
     rows.toDF("text", "pos", "ptext", "ppos")
       .withColumn("lim", least(length(col("text")) - col("pos"),
         length(col("ptext")) - col("ppos")).cast("int"))
@@ -76,7 +75,6 @@ class LcpLenSpec extends SparkSpec {
 
   test("kernel edge contract: positions beyond the end and negative " +
     "positions return 0") {
-    GraftFunctions.register(spark)
     val got = Seq(("abc", 9L, "abc", 0L), ("abc", 0L, "abc", 9L),
       ("abc", -1L, "abc", 0L))
       .toDF("text", "pos", "ptext", "ppos")
@@ -87,7 +85,6 @@ class LcpLenSpec extends SparkSpec {
   }
 
   test("analysis-time type error on non-string / non-bigint arguments") {
-    GraftFunctions.register(spark)
     val err = intercept[org.apache.spark.sql.AnalysisException] {
       Seq((1, 2)).toDF("a", "b")
         .select(GraftFunctions.lcpLen(col("a"), col("b"), col("a"), col("b")))

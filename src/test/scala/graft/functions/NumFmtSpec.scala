@@ -1,20 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the two cross-engine float-determinism conventions independent
   * of any gate query, so a refactor of NumFmt cannot silently weaken
   * them: (1) roundSigned collapses IEEE −0.0; (2) moneySum is exact and
   * partitioning/order-independent where double sums are not. */
-class NumFmtSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("numfmt-spec").getOrCreate()
-
+class NumFmtSpec extends graft.SparkSpec {
   test("roundSigned collapses -0.0 to +0.0 and is identity elsewhere") {
     import spark.implicits._
     val rows = Seq(-1e-9, 0.0, 1e-9, -0.123451, 2.5, -2.5).toDF("x")

@@ -16,7 +16,6 @@ class SimHash60Spec extends SparkSpec {
   import spark.implicits._
 
   private def viaKernel(texts: Seq[String]): Map[Long, Long] = {
-    GraftFunctions.register(spark)
     graft.llm.Dedup.simhash(
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text"))
@@ -59,7 +58,6 @@ class SimHash60Spec extends SparkSpec {
   }
 
   test("analysis-time type error on a non-string argument") {
-    GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(1L).toDF("v")
         .select(GraftFunctions.simHash60(col("v"))).collect()

@@ -424,7 +424,6 @@ class IvfSpec extends graft.SparkSpec {
     val ivf = Similarity.ivfTopK(vecs, k = 3, nList = 8, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute-force top-3 per query vector
-    graft.functions.GraftFunctions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id1").orderBy(col("cosine").desc, col("id2"))
     val brute = vecs.select($"id".as("id1"), $"v".as("v1"))

@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** LevenshteinThresholdRule: rewrite shape (every comparison form), the
   * no-rewrite cases, semantic equality against the naive predicate on
-  * boundary distances and NULLs, and the real injected-session path
-  * (second SparkSession on the shared context, built withExtensions —
-  * the same SparkContext-reuse pattern Spark's own extension suite uses). */
+  * boundary distances and NULLs, and the real injected-session path (the
+  * shared session is built with GraftExtensions). The naive ground truth
+  * comes from a session with the rule excluded. */
 class LevenshteinRuleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,45 +62,60 @@ class LevenshteinRuleSpec extends SparkSpec {
     assert(LevenshteinThresholdRule(once) == once)
   }
 
+  /** Ground truth where the rule cannot run: a session with it excluded.
+    * The shared session carries the rule, so a naive reference computed
+    * there would be the rule checked against itself. */
+  private lazy val naiveSession: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      LevenshteinThresholdRule.ruleName)
+    s
+  }
+
+  /** Rows of `path` passing `predicate` in the naive session, after
+    * checking that its optimized plan kept the naive form. */
+  private def naiveRows(path: String, predicate: String): Array[String] = {
+    val df = naiveSession.read.parquet(path).filter(predicate)
+    val plan = df.queryExecution.optimizedPlan
+    assert(banded(plan).isEmpty && naive(plan).nonEmpty, plan.toString)
+    df.collect().map(_.toString).sorted
+  }
+
+  // a parquet scan, not a local Seq — ConvertToLocalRelation folds
+  // filters over LocalRelation away before the plan can be inspected
+  private lazy val pairsPath: String = {
+    val p = java.nio.file.Files.createTempDirectory("lev_pairs").toString +
+      "/pairs.parquet"
+    pairs.write.parquet(p)
+    p
+  }
+
   test("banded rewrite keeps naive semantics on boundaries and NULLs") {
-    // ground truth: naive predicate in the shared (no-extensions) session
     for ((pred, bandedPred) <- Seq(
       "levenshtein(t1, t2) <= 3" -> "levenshtein(t1, t2, 3) >= 0",
       "levenshtein(t1, t2) <= 0" -> "levenshtein(t1, t2, 0) >= 0",
       "levenshtein(t1, t2) < 3"  -> "levenshtein(t1, t2, 2) >= 0",
       "levenshtein(t1, t2) = 3"  -> "levenshtein(t1, t2, 3) = 3")) {
-      val want = pairs.filter(pred).collect().map(_.toString).sorted
-      val got = pairs.filter(bandedPred).collect().map(_.toString).sorted
+      val want = naiveRows(pairsPath, pred)
+      val got = spark.read.parquet(pairsPath).filter(bandedPred)
+        .collect().map(_.toString).sorted
       assert(got.sameElements(want), s"$pred vs $bandedPred")
     }
   }
 
   test("injected session optimizes the naive SQL to the banded plan") {
-    // Second session on the one shared SparkContext: clear the default so
-    // getOrCreate builds a fresh session that honors withExtensions.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      // a parquet scan, not a local Seq — ConvertToLocalRelation folds
-      // filters over LocalRelation away before the plan can be inspected
-      val df = s2.read.parquet(s"$sf/documents.parquet")
-        .filter("levenshtein(lang, 'enn') <= 1").select("doc_id")
-      assert(banded(df.queryExecution.optimizedPlan).nonEmpty,
-        df.queryExecution.optimizedPlan.toString)
-      // and the injected functions ride along in the same session
-      assert(!s2.sql(
-        "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d))")
-        .head().isNullAt(0))
-      // same rows as the naive predicate in the no-extensions session
-      val want = spark.read.parquet(s"$sf/documents.parquet")
-        .filter("levenshtein(lang, 'enn') <= 1").count()
-      assert(df.count() == want)
-    } finally {
-      SparkSession.setDefaultSession(SparkSpec.session)
-      SparkSession.setActiveSession(SparkSpec.session)
-    }
+    // the shared session is built with GraftExtensions, so the rule runs
+    // in it as it does in Verify and Bench
+    val docs = s"$sf/documents.parquet"
+    val pred = "levenshtein(lang, 'enn') <= 1"
+    val df = spark.read.parquet(docs).filter(pred).select("doc_id")
+    assert(banded(df.queryExecution.optimizedPlan).nonEmpty,
+      df.queryExecution.optimizedPlan.toString)
+    // and the injected functions ride along in the same session
+    assert(!spark.sql(
+      "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d))")
+      .head().isNullAt(0))
+    // same rows as the naive predicate where the rule cannot run
+    assert(df.count() == naiveRows(docs, pred).length)
   }
 }

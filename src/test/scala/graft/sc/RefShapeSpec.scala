@@ -1,21 +1,12 @@
 package graft.sc
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Small-shape correctness gate for the reference-shape probe: the
   * pipeline+store summary must equal a driver-side brute force of the
   * same math computed straight off the COO (no store, no reindex), and
   * the generator must be partition-independent like GenData. */
-class RefShapeSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("refshape-spec").getOrCreate()
-
+class RefShapeSpec extends graft.SparkSpec {
   test("probe summary == brute-force recomputation at a small shape") {
     val cells = 500L; val genes = 40; val draws = 10; val minGenes = 10
     val coo = RefShape.coo(spark, cells, genes, draws)
