@@ -40,7 +40,9 @@ object Graft {
     * getOrCreate — and because getOrCreate returns any PRE-existing
     * session (whose static confs, including spark.sql.extensions, can no
     * longer change), the native functions are also registered directly
-    * on the returned session so the one-call contract holds either way. */
+    * on the returned session. The queries need a session from here (or
+    * one built with the same extension): they do not register anything
+    * themselves. */
   def session(master: String = "local[*]",
               conf: Map[String, String] = Map.empty): SparkSession = {
     val s = SparkSession.builder()

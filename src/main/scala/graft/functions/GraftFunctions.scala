@@ -16,9 +16,13 @@ import org.apache.spark.sql.functions.{call_function, expr}
   *    real cluster) or `.withExtensions(new GraftExtensions)`;
   *  - `register(spark)` — runtime registration into an existing session's
   *    function registry, for a session built without the extension. It
-  *    also installs the two aggregators (`exact_median`, `bounded_top3`),
-  *    which the extension does not inject. The queries call it, so they
-  *    run on any session.
+  *    also installs the two aggregators (`exact_median`, `bounded_top3`)
+  *    for SQL users; the extension does not inject them.
+  *
+  * The queries need a graft session (one built with the extension, as
+  * `graft.Graft.session` builds it): they call the native expressions
+  * by name and plan the as-of join with the injected strategy. They use
+  * the two aggregators through `udaf(...)`, never by name.
   */
 object GraftFunctions {
 
@@ -83,11 +87,8 @@ object GraftFunctions {
   }
 
   /** Idempotent runtime registration. EVERY path is guarded by a
-    * functionExists check: both udf.register and
-    * registerFunction WARN "replaced a previously registered
-    * function" on re-registration, and register() runs once per query
-    * in a 190-query bench — hundreds of WARN lines crowding the
-    * driver's 2000-char stdout tail otherwise. */
+    * functionExists check: both udf.register and registerFunction WARN
+    * "replaced a previously registered function" on re-registration. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def missing(n: String) = !reg.functionExists(FunctionIdentifier(n))
@@ -177,8 +178,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.nativeExpressions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinThresholdRule)
-    // the rung-(c) physical operator (plans/AsOfJoinPlan.scala); runtime
-    // sessions without extensions get it via AsOf.ensureStrategy
+    // the rung-(c) physical operator (plans/AsOfJoinPlan.scala)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

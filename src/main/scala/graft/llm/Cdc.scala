@@ -97,8 +97,6 @@ object Cdc {
     // The partition COUNT is explicit because AQE sizes exchanges by
     // BYTES and would coalesce this megabyte-scale-but-compute-bound
     // shuffle back to one partition.
-    {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), graft.functions.GraftFunctions
@@ -110,14 +108,12 @@ object Cdc {
         md5(concat_ws("|",
           expr("transform(chunks, c -> md5(c))"))).as("fingerprint"))
       .orderBy("doc_id")
-    }
 
   /** `q_dedup_cdc`: doc pairs sharing ≥ 2 substantial chunks — the
     * shift-robust near-dup witness. One shuffle keyed on chunk md5,
     * df-capped so no chunk joins more than MaxChunkDf docs. */
   def dedupCdc(s: SparkSession, d: String): DataFrame = {
     // same row-spreading rationale (and explicit count) as textCdc
-    graft.functions.GraftFunctions.register(s)
     val chunks = Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), explode(graft.functions.GraftFunctions

@@ -69,7 +69,6 @@ object Dedup {
     * aggregation formulation below ([[simhashAgg]]) is kept as the
     * declarative twin SimHash60Spec pins the kernel against. */
   def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.GraftFunctions.simHash60(col("text")).as("simhash"))
   }

@@ -33,7 +33,6 @@ object KnnClassify {
   val MaxTestId = 200L
 
   def knnClassify(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))

@@ -47,7 +47,6 @@ object Selection {
     * the 100 TB cost is exactly one corpus scan + one doc-keyed
     * shuffle. */
   def textDsir(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     // r12 optimization (guide §2.3/§4): the per-doc bucket HISTOGRAM is
     // computed by one compiled kernel pass (DsirBuckets — identical

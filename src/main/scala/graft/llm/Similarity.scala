@@ -47,7 +47,6 @@ object Similarity {
     * correctness baseline for the LSH path). Uses the native codegen'd
     * CosineSimilarity expression (graft.functions). */
   def similarityKnn(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = vecs(s, d, 50)
     val pairs = e.select(col("id").as("id1"), col("v").as("v1"))
       .join(e.select(col("id").as("id2"), col("v").as("v2")),
@@ -61,7 +60,6 @@ object Similarity {
 
   /** Embedding near-duplicate pairs: cosine ≥ tau within a bounded block. */
   def dedupEmbedding(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = vecs(s, d, 200)
     e.select(col("id").as("id1"), col("v").as("v1"))
       .join(e.select(col("id").as("id2"), col("v").as("v2")),
@@ -94,7 +92,6 @@ object Similarity {
   def lshPairs(df: DataFrame, tau: Double, dim: Int = 0, tables: Int = 8,
                planes: Int = 12, seed: Long = 42L,
                maxBucket: Int = 4096): DataFrame = {
-    GraftFunctions.register(df.sparkSession) // dot_product used below
     // dim <= 0 (the default) derives the width from the data — a one-row
     // limit scan, the same bounded-driver-lookup class as a broadcast
     // side. A hardcoded default would silently mis-project the day the
@@ -130,7 +127,6 @@ object Similarity {
         Seq("tbl", "bucket"))
       .filter(col("id1") < col("id2"))
       .select("id1", "id2").distinct()
-    GraftFunctions.register(df.sparkSession)
     cand
       .join(df.select(col("id").as("id1"), col("v").as("v1")), Seq("id1"))
       .join(df.select(col("id").as("id2"), col("v").as("v2")), Seq("id2"))
@@ -160,7 +156,6 @@ object Similarity {
               maxFitRows: Int = 4000,
               probeIds: Option[DataFrame] = None): DataFrame = {
     val spark = df.sparkSession
-    GraftFunctions.register(spark) // l2_sq used below; resolve-at-analysis
     // coarse-quantizer fit: bounded sample (see boundedFitSample — a
     // coarse quantizer needs ~100s of points per cell, so at 100 TB the
     // fit input stays a few thousand rows). Lloyd's runs ON THE DRIVER
@@ -198,7 +193,6 @@ object Similarity {
       withCells.join(broadcast(ids.select(col("id"))), Seq("id"), "left_semi"))
     val probes = probeSide.select(col("id").as("id1"), col("v").as("v1"),
       explode(col("probe_cells")).as("cell"))
-    GraftFunctions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id1").orderBy(col("cosine").desc, col("id2"))
     probes.join(index, Seq("cell"))
@@ -310,7 +304,6 @@ object Similarity {
     val m = books.length
     val dsub = books.head.head.length
     val booksLit = typedlit(books.map(_.map(_.toSeq).toSeq).toSeq)
-    GraftFunctions.register(df.sparkSession)
     val codes = transform(sequence(lit(0), lit(m - 1)), sub => {
       val sv = slice(col("v"), sub * dsub + 1, lit(dsub))
       val ds = transform(element_at(booksLit, sub + 1), c =>
@@ -445,7 +438,6 @@ object Similarity {
   }
 
   def similarityRecall(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val k = 5
     val e = Tables.embeddings(s, d).select(col("vec_id").as("id"),
       transform(col("embedding"), _.cast("double")).as("v"))
@@ -472,7 +464,6 @@ object Similarity {
     * arithmetic in both. The KMeans-dependent IVF side stays rows-only
     * in q_similarity_recall. */
   def similarityRecallExact(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id").as("id"),
       transform(col("embedding"), _.cast("double")).as("v"))
     val qids = e.select(col("id"),

@@ -342,7 +342,6 @@ object Suffix {
     * bound, unreachable for corpora sharing any 4-char string. */
   def dedupSuffixMaxrep(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s) // lcp_len used below
     val docs = Tables.documents(s, d)
     val levels = SuffixIndex.levels(s, d)
     val full = levels.last._2

@@ -62,10 +62,9 @@ case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Injected via GraftExtensions (extension-built sessions) AND
-  * `spark.experimental.extraStrategies` (the runtime fallback
-  * `AsOf.ensureStrategy` installs) — planLater keeps child planning
-  * with Spark, this strategy claims only its own node. */
+/** Injected via GraftExtensions, so a session needs the extension to
+  * plan [[AsOfJoinNode]] — planLater keeps child planning with Spark,
+  * this strategy claims only its own node. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinNode(l, r, lk, lts, rk, rts, outer, tol) =>

@@ -66,15 +66,6 @@ object AsOf {
       .orderBy("event_id")
   }
 
-  /** Installs AsOfJoinStrategy on sessions not built with
-    * GraftExtensions (the extensions path injects it at build time;
-    * `extraStrategies` is the public runtime route). Idempotent. */
-  def ensureStrategy(s: SparkSession): Unit = {
-    val cur = s.experimental.extraStrategies
-    if (!cur.contains(graft.plans.AsOfJoinStrategy))
-      s.experimental.extraStrategies = cur :+ graft.plans.AsOfJoinStrategy
-  }
-
   /** The rung-(c) native as-of join (plans/AsOfJoinPlan.scala): same
     * semantics as [[asOfJoin]], planned as a dedicated co-partitioned
     * streaming merge instead of union+window. Key/ts must be BIGINT;
@@ -85,7 +76,6 @@ object AsOf {
                      leftOuter: Boolean = false,
                      tolerance: Option[Long] = None): DataFrame = {
     val s = probe.sparkSession
-    ensureStrategy(s)
     val lPlan = probe.queryExecution.analyzed
     val rPlan = build.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

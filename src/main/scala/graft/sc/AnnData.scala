@@ -410,13 +410,11 @@ object AnnData {
     writeCompressed(elems, dim, n, path, "csc_matrix", (n, dim), chunk)
   }
 
-  /** Read a CSR X member group back as distributed COO (id, gene,
-    * value). Row assignment — element e belongs to row r iff
-    * indptr[r] ≤ e < indptr[r+1] — is the contiguous-interval join,
-    * done grid-cell style (the q_join_interval shape): row spans
-    * explode into fixed cells of the element-index domain, elements
-    * join their one cell, the span predicate filters. One equi-join,
-    * no window over the full element domain, no driver indptr. */
+  /** The reader behind both [[readCsrX]] and [[readCscX]]: a
+    * compressed-axis member group (`data`, `indices`, `indptr`) as
+    * distributed (major, minor, v) — majors are cells in CSR and genes
+    * in CSC. Elements reach their major through the grid-cell interval
+    * join described at [[readCsrX]]. */
   private def readCompressed(spark: SparkSession, groupPath: String,
                              member: String, cellWidth: Long): DataFrame = {
     val data = ZarrGroup.readMember1(spark, groupPath, s"$member/data")

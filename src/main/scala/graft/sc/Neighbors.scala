@@ -27,7 +27,6 @@ object Neighbors {
     * graph analytics (PageRank). */
   def knnEdges(s: SparkSession, d: String, k: Int = 10,
                maxId: Long = 300): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .filter(col("vec_id") < maxId)
       .select(col("vec_id").as("id"),

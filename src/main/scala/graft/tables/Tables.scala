@@ -39,7 +39,10 @@ object Tables {
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long, String), org.apache.spark.sql.types.StructType]()
 
-  /** Read a parquet file/dir with the memoized schema (see above). */
+  /** Read a parquet file/dir with the memoized schema (see above).
+    * `p` is a literal path: the reader expands Hadoop glob patterns, so
+    * its metacharacters (and the escape character itself) are escaped —
+    * a data dir named `a\b` or `a[1]` is read, not parsed as a pattern. */
   def readParquet(spark: SparkSession, p: String,
                   confKey: String = ""): DataFrame = {
     val hp = new org.apache.hadoop.fs.Path(p)
@@ -47,9 +50,10 @@ object Tables {
     val st = fs.getFileStatus(fs.makeQualified(hp))
     val key = (fs.makeQualified(hp).toString, st.getModificationTime,
       st.getLen, confKey)
+    val literal = p.replaceAll("""([\\*?\[\]{}])""", """\\$1""")
     val sch = schemaMemo.computeIfAbsent(key,
-      _ => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(p)
+      _ => spark.read.parquet(literal).schema)
+    spark.read.schema(sch).parquet(literal)
   }
 
   /** Plain parquet load for every table except `events`. */

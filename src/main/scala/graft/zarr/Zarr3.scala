@@ -2,16 +2,18 @@ package graft.zarr
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
 /** Zarr v3 store support (public core spec v3.0 + the registered
   * `sharding_indexed` codec spec): `zarr.json` array metadata, the
   * default chunk-key encoding (`c/i/j`), the `bytes`(+`gzip`) codec
-  * chain, and the sharding codec's read path — one stored object per
-  * SHARD holding a C-ordered run of gzip'd inner chunks plus a binary
-  * index of (offset, nbytes) u64 pairs (missing chunk = 2^64-1 twice),
-  * optionally crc32c-sealed, at the start or end of the shard.
+  * chain, and the sharding codec's read and write paths — one stored
+  * object per SHARD holding a C-ordered run of gzip'd inner chunks plus
+  * a binary index of (offset, nbytes) u64 pairs (missing chunk =
+  * 2^64-1 twice), optionally crc32c-sealed, at the start or end of the
+  * shard.
   *
   * Everything normalizes into [[ZarrMeta]], so the DSv2 source
   * (ZarrDataSource), its pruning, and the band readers work on v3
@@ -23,7 +25,9 @@ import org.apache.hadoop.fs.{Path => HPath}
   * The ecosystem is mid-migration v2→v3; the reference era was v2
   * [SURVEY.md §2A R1], so v3 is a forward-looking read path: scans and
   * pipelines run identically over either store generation (the
-  * q_zarr_scan_v3 gate query shares q_zarr_scan's DuckDB oracle). */
+  * q_zarr_scan_v3 gate query shares q_zarr_scan's DuckDB oracle).
+  * [[ZarrGroup]]'s 1-D members use the same data-type table, array
+  * document and codec chain. */
 object Zarr3 {
 
   /** v3 `data_type` names ↔ the internal v2-style dtype codes. */
@@ -32,45 +36,62 @@ object Zarr3 {
     "int16" -> "<i2", "int32" -> "<i4", "int64" -> "<i8")
   private val DataTypeNames = DataTypes.map(_.swap)
 
-  /** Parse `<path>/zarr.json` into a ZarrMeta (format = 3). */
-  def readMeta(path: String, conf: Configuration): ZarrMeta = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(new HPath(p, "zarr.json"))
-    val node = try mapper.readTree(in) finally in.close()
+  /** Internal dtype code → v3 `data_type`. Fixed-width bytes `|S{w}`
+    * become the core raw-bits type `r{8w}`: v3 has no `|S`, and raw
+    * bits is the spec-legal fixed-width byte carrier. */
+  def dataTypeName(dtype: String): String =
+    if (dtype.startsWith("|S")) s"r${dtype.drop(2).toInt * 8}"
+    else DataTypeNames.getOrElse(dtype, throw new IllegalArgumentException(
+      s"unsupported v3 dtype $dtype"))
+
+  /** v3 `data_type` → internal dtype code (raw bits → `|S`). */
+  def dtypeOf(dataType: String): String =
+    if (dataType.matches("r[0-9]+")) {
+      val bits = dataType.drop(1).toInt
+      require(bits % 8 == 0, s"raw-bits dtype $dataType not byte-aligned")
+      s"|S${bits / 8}"
+    } else DataTypes.getOrElse(dataType, throw new IllegalArgumentException(
+      s"unsupported v3 data_type $dataType"))
+
+  /** The checks every v3 array document must pass: an array node of
+    * `ndim` dimensions on the regular chunk grid with the default
+    * chunk-key encoding. Returns the chunk-key separator. */
+  private[zarr] def checkArray(node: JsonNode, ndim: Int): String = {
     require(node.get("zarr_format").asInt() == 3, "zarr.json: zarr_format != 3")
     require(node.get("node_type").asText() == "array",
-      "zarr.json: only array nodes supported")
-    require(node.get("shape").size() == 2, "only 2-D zarr arrays supported")
-    val dtype = DataTypes.getOrElse(node.get("data_type").asText(),
-      sys.error(s"unsupported v3 data_type ${node.get("data_type").asText()}"))
-    val grid = node.get("chunk_grid")
-    require(grid.get("name").asText() == "regular",
+      "zarr.json: not an array node")
+    require(node.get("shape").size() == ndim, s"not a $ndim-D zarr array")
+    require(node.get("chunk_grid").get("name").asText() == "regular",
       "only the regular chunk grid is supported")
-    val cshape = grid.get("configuration").get("chunk_shape")
     val enc = node.get("chunk_key_encoding")
     require(enc == null || enc.get("name").asText() == "default",
       "only the default chunk-key encoding is supported")
-    val sep =
-      if (enc == null || enc.get("configuration") == null) "/"
-      else Option(enc.get("configuration").get("separator"))
-        .map(_.asText()).getOrElse("/")
+    if (enc == null || enc.get("configuration") == null) "/"
+    else Option(enc.get("configuration").get("separator"))
+      .map(_.asText()).getOrElse("/")
+  }
+
+  /** Parse `<path>/zarr.json` into a ZarrMeta (format = 3). */
+  def readMeta(path: String, conf: Configuration): ZarrMeta = {
+    val (fs, p) = ZarrIO.fsOf(path, conf)
+    val node = new ObjectMapper().readTree(
+      ZarrIO.readUtf8(fs, new HPath(p, "zarr.json")))
+    val sep = checkArray(node, 2)
+    val cshape = node.get("chunk_grid").get("configuration").get("chunk_shape")
     val fv = node.get("fill_value")
     // codec chain: either [bytes (+gzip)] or [sharding_indexed{...}]
-    val codecs = node.get("codecs")
-    val (compressor, inner) = parseCodecs(codecs)
+    val (compressor, inner) = parseCodecs(node.get("codecs"))
     ZarrMeta(
       rows = node.get("shape").get(0).asLong(),
       cols = node.get("shape").get(1).asInt(),
       chunkRows = cshape.get(0).asInt(),
       chunkCols = cshape.get(1).asInt(),
-      dtype = dtype, compressor = compressor,
+      dtype = dtypeOf(node.get("data_type").asText()), compressor = compressor,
       fillValue = if (fv == null || fv.isNull) 0.0 else fv.asDouble(),
       format = 3, sep = sep, inner = inner)
   }
 
-  private def parseCodecs(codecs: com.fasterxml.jackson.databind.JsonNode)
+  private[zarr] def parseCodecs(codecs: JsonNode)
       : (Option[String], Option[ShardSpec]) = {
     require(codecs != null && codecs.size() >= 1, "v3 array needs a codec chain")
     val names = (0 until codecs.size()).map(codecs.get(_).get("name").asText())
@@ -180,11 +201,10 @@ object Zarr3 {
   }
 
   // ------------------------------------------------------------ writing --
-  /** `<path>/zarr.json` for the given meta (sharded when inner set). */
-  def writeMeta(path: String, meta: ZarrMeta, conf: Configuration): Unit = {
-    require(meta.format == 3)
-    val dt = DataTypeNames(meta.dtype)
-    val innerCodecs = meta.compressor match {
+  /** The `bytes`(+`gzip`) codec chain of an unsharded array (or of a
+    * shard's inner chunks). */
+  private[zarr] def codecsJson(compressor: Option[String]): String =
+    compressor match {
       case Some("gzip") =>
         """[{"name":"bytes","configuration":{"endian":"little"}},""" +
           """{"name":"gzip","configuration":{"level":5}}]"""
@@ -192,6 +212,21 @@ object Zarr3 {
         """[{"name":"bytes","configuration":{"endian":"little"}}]"""
       case other => sys.error(s"v3 writer: unsupported compressor $other")
     }
+
+  /** A v3 array node's `zarr.json` document. */
+  private[zarr] def arrayJson(shape: Seq[Long], chunkShape: Seq[Int],
+                              dtype: String, sep: String, fill: String,
+                              codecs: String): String =
+    s"""{"zarr_format":3,"node_type":"array",""" +
+      s""""shape":[${shape.mkString(",")}],"data_type":"${dataTypeName(dtype)}",""" +
+      s""""chunk_grid":{"name":"regular","configuration":{"chunk_shape":[${chunkShape.mkString(",")}]}},""" +
+      s""""chunk_key_encoding":{"name":"default","configuration":{"separator":"$sep"}},""" +
+      s""""fill_value":$fill,"codecs":$codecs}"""
+
+  /** `<path>/zarr.json` for the given meta (sharded when inner set). */
+  def writeMeta(path: String, meta: ZarrMeta, conf: Configuration): Unit = {
+    require(meta.format == 3)
+    val innerCodecs = codecsJson(meta.compressor)
     val codecs = meta.inner match {
       case Some(sp) =>
         // the WRITER only produces the end+crc32c layout; a ShardSpec
@@ -208,17 +243,11 @@ object Zarr3 {
           s""""index_location":"end"}}]"""
       case None => innerCodecs
     }
-    val json =
-      s"""{"zarr_format":3,"node_type":"array",""" +
-        s""""shape":[${meta.rows},${meta.cols}],"data_type":"$dt",""" +
-        s""""chunk_grid":{"name":"regular","configuration":{"chunk_shape":[${meta.chunkRows},${meta.chunkCols}]}},""" +
-        s""""chunk_key_encoding":{"name":"default","configuration":{"separator":"${meta.sep}"}},""" +
-        s""""fill_value":${meta.fillValue},"codecs":$codecs}"""
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
+    val (fs, p) = ZarrIO.fsOf(path, conf)
     fs.mkdirs(p)
-    val out = fs.create(new HPath(p, "zarr.json"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    ZarrIO.writeUtf8(fs, new HPath(p, "zarr.json"),
+      arrayJson(Seq(meta.rows, meta.cols), Seq(meta.chunkRows, meta.chunkCols),
+        meta.dtype, meta.sep, meta.fillValue.toString, codecs))
   }
 
   /** Write one shard: inner chunks C-ordered (each independently
@@ -232,6 +261,8 @@ object Zarr3 {
     require(values.length == meta.chunkRows * meta.chunkCols)
     val gridR = meta.chunkRows / sp.innerRows
     val gridC = meta.chunkCols / sp.innerCols
+    val innerMeta = meta.copy(chunkRows = sp.innerRows,
+      chunkCols = sp.innerCols, inner = None)
     val body = new java.io.ByteArrayOutputStream()
     val index = ByteBuffer.allocate(gridR * gridC * 16)
       .order(ByteOrder.LITTLE_ENDIAN)
@@ -248,19 +279,7 @@ object Zarr3 {
         }
         r += 1
       }
-      val bb = ByteBuffer.allocate(inner.length * meta.bytesPerElem)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      meta.dtype match {
-        case "<f4" => inner.foreach(v => bb.putFloat(v.toFloat))
-        case "<f8" => inner.foreach(bb.putDouble)
-        case "<i2" => inner.foreach(v => bb.putShort(v.toShort))
-        case "<i4" => inner.foreach(v => bb.putInt(v.toInt))
-        case "<i8" => inner.foreach(v => bb.putLong(v.toLong))
-      }
-      val enc = meta.compressor match {
-        case Some("gzip") => ZarrIO.gzip(bb.array())
-        case _ => bb.array()
-      }
+      val enc = ZarrIO.encodeChunkBytes(inner, innerMeta)
       index.putLong(body.size().toLong)
       index.putLong(enc.length.toLong)
       body.write(enc)
@@ -274,47 +293,5 @@ object Zarr3 {
     val os = fs.create(ZarrIO.chunkPath(path, meta, i, j), true)
     try { os.write(body.toByteArray); os.write(idxBytes); os.write(tail) }
     finally os.close()
-  }
-}
-
-/** Distributed v3-sharded writer (fixture + API twin of ZarrSink): each
-  * executor writes the shard objects of its own row band — one shuffle
-  * on the shard key, no driver matrix materialization. */
-object Zarr3Sink {
-  import org.apache.spark.sql.{DataFrame}
-  import org.apache.spark.sql.functions._
-
-  def writeMatrix(df: DataFrame, path: String, dim: Int,
-                  shardRows: Int = 128, innerRows: Int = 32,
-                  gzip: Boolean = true, dtype: String = "<f8"): ZarrMeta = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val n = df.count()
-    val meta = ZarrMeta(rows = n, cols = dim, chunkRows = shardRows,
-      chunkCols = dim, dtype = dtype,
-      compressor = if (gzip) Some("gzip") else None, fillValue = 0.0,
-      format = 3, sep = "/",
-      inner = Some(ShardSpec(innerRows, dim)))
-    Zarr3.writeMeta(path, meta, ZarrIO.hadoopConf())
-    val sconf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val written = df.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Seq[Double])]
-      .groupByKey(_._1 / shardRows)
-      .mapGroups { (band: Long, rows: Iterator[(Long, Seq[Double])]) =>
-        val buf = Array.fill(shardRows * dim)(0.0)
-        var count = 0
-        rows.foreach { case (id, vec) =>
-          val r = (id - band * shardRows).toInt
-          var c = 0
-          while (c < dim) { buf(r * dim + c) = vec(c); c += 1 }
-          count += 1
-        }
-        Zarr3.writeShard(path, meta, band, 0, buf, sconf.value)
-        count
-      }
-      .reduce(_ + _)
-    require(written == n, s"zarr v3 write: $written of $n rows written")
-    meta
   }
 }

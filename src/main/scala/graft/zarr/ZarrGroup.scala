@@ -3,12 +3,12 @@ package graft.zarr
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** Zarr v2 GROUPS — the AnnData-on-zarr layout the reference actually
+/** Zarr GROUPS — the AnnData-on-zarr layout the reference actually
   * deployed (an `.zgroup` directory whose members are arrays: `X` the
   * cell×gene matrix, `obs/…` and `var/…` the 1-D annotation columns) —
   * plus CONSOLIDATED METADATA (`.zmetadata`), the object-store
@@ -33,15 +33,32 @@ import java.nio.{ByteBuffer, ByteOrder}
   * re-reading). Writers that mutate a consolidated store must
   * re-consolidate or delete `.zmetadata`; the versioned-store commit
   * protocol (ZarrVersioned) makes that atomic at the `current` pointer.
+  *
+  * Both spec generations, one code path: the dialect is a value the
+  * metadata carries (`Zarr1Meta.format`, as `ZarrMeta.format` for 2-D
+  * arrays). Writers take `format = 3` the way the DSv2 writer does;
+  * readers detect it on disk. Zarr v3 moves everything metadata-shaped
+  * into one `zarr.json` per node (`node_type: group|array`, attributes
+  * INSIDE the document, no `.zgroup`/`.zarray`/`.zattrs` sidecars),
+  * chunk keys gain the `c/` prefix, the compressor becomes the
+  * `bytes`+`gzip` codec chain, and `|S{w}` strings are stored as the
+  * raw-bits type `r{8w}` ([[Zarr3.dataTypeName]]). Consolidated
+  * metadata follows the convention zarr-python ships: the ROOT group's
+  * `zarr.json` carries `consolidated_metadata: {kind: "inline",
+  * must_understand: false, metadata: {<path>: <node zarr.json>}}` —
+  * still ONE metadata GET to open the store.
   */
 object ZarrGroup extends Serializable {
 
   /** 1-D member-array metadata. `sWidth` > 0 iff dtype is `|S{sWidth}`.
     * `fill` is the store's declared fill_value as text ("0" written by
     * this layer; external stores may declare anything — honored when
-    * synthesizing missing chunks, never silently zeroed). */
+    * synthesizing missing chunks, never silently zeroed). `format` is
+    * the spec generation (2 or 3): it names the metadata object, the
+    * chunk keys and the metadata text. */
   case class Zarr1Meta(n: Long, chunk: Int, dtype: String,
-                       compressor: Option[String], fill: String = "0") {
+                       compressor: Option[String], fill: String = "0",
+                       format: Int = 2) {
     require(chunk > 0, "chunk must be positive")
     val sWidth: Int =
       if (dtype.startsWith("|S")) dtype.drop(2).toInt else 0
@@ -78,46 +95,57 @@ object ZarrGroup extends Serializable {
       }
       raw
     }
-    def metaJson: String = {
-      val comp = compressor match {
-        case Some("zlib") => """{"id":"zlib","level":5}"""
-        case _ => "null"
+    /** The metadata object's name: `.zarray` (v2) or `zarr.json` (v3). */
+    def metaName: String = if (format == 3) "zarr.json" else ".zarray"
+    /** Chunk key of a band: `<i>` (v2) or `c/<i>` (v3 default encoding). */
+    def chunkKey(band: Long): String =
+      if (format == 3) s"c/$band" else band.toString
+    def metaJson: String =
+      if (format == 3)
+        Zarr3.arrayJson(Seq(n), Seq(chunk), dtype, "/",
+          if (sWidth > 0) "0" else fill, Zarr3.codecsJson(compressor))
+      else {
+        val comp = compressor match {
+          case Some("zlib") => """{"id":"zlib","level":5}"""
+          case _ => "null"
+        }
+        val fillJson = if (sWidth > 0) "\"\"" else fill
+        s"""{"zarr_format":2,"shape":[$n],"chunks":[$chunk],""" +
+          s""""dtype":"$dtype","compressor":$comp,""" +
+          s""""fill_value":$fillJson,"order":"C","filters":null}"""
       }
-      val fillJson = if (sWidth > 0) "\"\"" else fill
-      s"""{"zarr_format":2,"shape":[$n],"chunks":[$chunk],""" +
-        s""""dtype":"$dtype","compressor":$comp,""" +
-        s""""fill_value":$fillJson,"order":"C","filters":null}"""
-    }
   }
 
-  private def fsOf(path: String, conf: Configuration): (FileSystem, HPath) = {
-    val p = new HPath(path)
-    (p.getFileSystem(conf), p)
-  }
+  import ZarrIO.{fsOf, readUtf8, writeUtf8}
 
-  private def writeUtf8(fs: FileSystem, p: HPath, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readUtf8(fs: FileSystem, p: HPath): String = {
-    val st = fs.getFileStatus(p)
-    val raw = new Array[Byte](st.getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, raw) finally in.close()
-    new String(raw, "UTF-8")
-  }
-
-  /** `{"zarr_format":2}` group marker — one per group level. */
-  def writeGroupMarker(path: String,
+  /** Group marker — one per group level: `.zgroup` (v2, attributes in a
+    * `.zattrs` sidecar) or a `zarr.json` group node (v3, attributes
+    * inline). */
+  def writeGroupMarker(path: String, attrsJson: Option[String] = None,
+                       format: Int = 2,
                        conf: Configuration = ZarrIO.hadoopConf()): Unit = {
     val (fs, p) = fsOf(path, conf)
     fs.mkdirs(p)
-    writeUtf8(fs, new HPath(p, ".zgroup"), """{"zarr_format":2}""")
+    if (format == 3) {
+      val attrs = attrsJson.map(a => s""","attributes":$a""").getOrElse("")
+      writeUtf8(fs, new HPath(p, "zarr.json"),
+        s"""{"zarr_format":3,"node_type":"group"$attrs}""")
+    } else {
+      writeUtf8(fs, new HPath(p, ".zgroup"), """{"zarr_format":2}""")
+      attrsJson.foreach(writeAttrs(path, _, conf))
+    }
   }
 
-  private def parse1Meta(node: JsonNode): Zarr1Meta = {
-    require(node.get("zarr_format").asInt() == 2, "only zarr v2 supported")
+  /** Parse a 1-D array document of either spec generation. */
+  private def parse1Meta(node: JsonNode): Zarr1Meta =
+    node.get("zarr_format").asInt() match {
+      case 2 => parse1Meta2(node)
+      case 3 => parse1Meta3(node)
+      case other => throw new IllegalArgumentException(
+        s"unsupported zarr_format $other")
+    }
+
+  private def parse1Meta2(node: JsonNode): Zarr1Meta = {
     require(node.get("shape").size() == 1, "not a 1-D zarr array")
     require(node.get("order").asText() == "C", "only C-order zarr supported")
     require(node.get("filters") == null || node.get("filters").isNull,
@@ -149,11 +177,37 @@ object ZarrGroup extends Serializable {
       dtype, compId, if (dtype.startsWith("|S")) "0" else fill)
   }
 
+  private def parse1Meta3(node: JsonNode): Zarr1Meta = {
+    // chunkKey writes and reads `c/<i>`: any other separator would make
+    // every chunk look absent and read back as fill_value
+    val sep = Zarr3.checkArray(node, 1)
+    require(sep == "/", s"1-D v3 arrays: chunk-key separator '$sep' unsupported")
+    val (comp, shard) = Zarr3.parseCodecs(node.get("codecs"))
+    require(shard.isEmpty, "sharded 1-D zarr arrays are not supported")
+    val dtype = Zarr3.dtypeOf(node.get("data_type").asText())
+    val fv = node.get("fill_value")
+    val fill =
+      if (fv == null || fv.isNull || dtype.startsWith("|S")) "0"
+      else fv.asText()
+    Zarr1Meta(node.get("shape").get(0).asLong(),
+      node.get("chunk_grid").get("configuration").get("chunk_shape")
+        .get(0).asInt(),
+      dtype, comp, fill, format = 3)
+  }
+
+  /** Member metadata read straight off its own document: `.zarray`
+    * first, then v3 `zarr.json` (the 2-D `ZarrIO.readMeta` order). */
   def read1Meta(path: String,
                 conf: Configuration = ZarrIO.hadoopConf()): Zarr1Meta = {
     val (fs, p) = fsOf(path, conf)
-    val mapper = new ObjectMapper()
-    parse1Meta(mapper.readTree(readUtf8(fs, new HPath(p, ".zarray"))))
+    val text =
+      try readUtf8(fs, new HPath(p, ".zarray"))
+      catch { case fnf: java.io.FileNotFoundException =>
+        val v3 = new HPath(p, "zarr.json")
+        if (!fs.exists(v3)) throw fnf
+        readUtf8(fs, v3)
+      }
+    parse1Meta(new ObjectMapper().readTree(text))
   }
 
   // ------------------------------------------------------------- write --
@@ -184,21 +238,6 @@ object ZarrGroup extends Serializable {
       case _ => raw
     }
   }
-
-  /** Distributed 1-D array write: `df` must be (id BIGINT 0..n-1, value)
-    * — the annotation-column shape. One shuffle on id div chunk forms
-    * the chunk bands; each executor writes its own chunk objects.
-    * Metadata (with the observed n) lands AFTER the chunks — final
-    * visibility is the caller's consolidate/commit step either way, and
-    * deriving n from the write pass itself keeps the whole write ONE
-    * Spark job (the separate df.count() used to re-execute the entire
-    * upstream plan — a full extra pp-chain/join execution per member
-    * write; r13, guide §1.2/§2.4). */
-  def write1(df: DataFrame, path: String, chunk: Int, dtype: String,
-             zlib: Boolean = true): Zarr1Meta =
-    write1Impl(df, path,
-      Zarr1Meta(0, chunk, dtype, if (zlib) Some("zlib") else None),
-      metaName = ".zarray", metaText = _.metaJson, keyOf = _.toString)
 
   /** Per-write-pass band accounting: (bands seen, rows seen, max band
     * id, max band's length, every NON-max band full). Folding these
@@ -231,15 +270,24 @@ object ZarrGroup extends Serializable {
     n
   }
 
-  /** Shared distributed 1-D writer behind the v2 layer and
-    * [[Zarr3Group]] — only the metadata object and chunk-key naming
-    * differ between the formats. `meta.n` is set from the write pass. */
-  private[zarr] def write1Impl(df: DataFrame, path: String, meta0: Zarr1Meta,
-                               metaName: String, metaText: Zarr1Meta => String,
-                               keyOf: Long => String): Zarr1Meta = {
+  /** Distributed 1-D array write: `df` must be (id BIGINT 0..n-1, value)
+    * — the annotation-column shape. One shuffle on id div chunk forms
+    * the chunk bands; each executor writes its own chunk objects.
+    * Metadata (with the observed n) lands AFTER the chunks — final
+    * visibility is the caller's consolidate/commit step either way, and
+    * deriving n from the write pass itself keeps the whole write ONE
+    * Spark job (the separate df.count() used to re-execute the entire
+    * upstream plan — a full extra pp-chain/join execution per member
+    * write; r13, guide §1.2/§2.4). `format = 3` writes the v3 dialect;
+    * `zlib` compresses with the dialect's codec (zlib in v2, gzip in
+    * v3), as the DSv2 writer's `zlib` option does. */
+  def write1(df: DataFrame, path: String, chunk: Int, dtype: String,
+             zlib: Boolean = true, format: Int = 2): Zarr1Meta = {
+    val meta0 = Zarr1Meta(0, chunk, dtype,
+      if (!zlib) None else Some(if (format == 3) "gzip" else "zlib"),
+      format = format)
     val spark = df.sparkSession
     import spark.implicits._
-    val chunk = meta0.chunk
     val (fs, p) = fsOf(path, ZarrIO.hadoopConf())
     fs.mkdirs(p)
     val sconf = new SerializableHadoopConf(
@@ -264,7 +312,7 @@ object ZarrGroup extends Serializable {
       require(!trimmed.contains(null), s"band $band has missing ids")
       val bytes = encodeChunk(meta0, trimmed)
       val (bfs, bp) = fsOf(path, sconf.value)
-      val out = bfs.create(new HPath(bp, keyOf(band)), true)
+      val out = bfs.create(new HPath(bp, meta0.chunkKey(band)), true)
       try out.write(bytes) finally out.close()
       (1L, len.toLong, band, len, true)
     }
@@ -298,7 +346,7 @@ object ZarrGroup extends Serializable {
     val n = validatedN(
       summaries.rdd.fold(emptySummary)(mergeSummaries(chunk)), chunk)
     val meta = meta0.copy(n = n)
-    writeUtf8(fs, new HPath(p, metaName), metaText(meta))
+    writeUtf8(fs, new HPath(p, meta.metaName), meta.metaJson)
     meta
   }
 
@@ -360,7 +408,7 @@ object ZarrGroup extends Serializable {
               s"member ${names(j)} band $band has missing ids or null values")
             val bytes = encodeChunk(metas(j), vals)
             val (bfs, bp) = fsOf(s"$basePath/${names(j)}", sconf.value)
-            val out = bfs.create(new HPath(bp, band.toString), true)
+            val out = bfs.create(new HPath(bp, metas(j).chunkKey(band)), true)
             try out.write(bytes) finally out.close()
             j += 1
           }
@@ -399,7 +447,7 @@ object ZarrGroup extends Serializable {
     val finalMetas = names.zip(metas.map(_.copy(n = n)))
     finalMetas.foreach { case (name, meta) =>
       val (fs, p) = fsOf(s"$basePath/$name", ZarrIO.hadoopConf())
-      writeUtf8(fs, new HPath(p, ".zarray"), meta.metaJson)
+      writeUtf8(fs, new HPath(p, meta.metaName), meta.metaJson)
     }
     finalMetas.toMap
   }
@@ -410,8 +458,7 @@ object ZarrGroup extends Serializable {
     * (idx, value) rows; value is BIGINT for int dtypes, DOUBLE for <f8,
     * STRING (NUL-stripped UTF-8) for |S. A missing chunk object is legal
     * zarr — every element takes the store's declared fill_value. */
-  def read1(spark: SparkSession, path: String, meta: Zarr1Meta,
-            keyOf: Long => String = _.toString): DataFrame = {
+  def read1(spark: SparkSession, path: String, meta: Zarr1Meta): DataFrame = {
     import spark.implicits._
     val sconf = new SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
@@ -420,7 +467,7 @@ object ZarrGroup extends Serializable {
     val mN = meta.n
     def chunkBytes(band: Long): Array[Byte] = {
       val (fs, p) = fsOf(path, sconf.value)
-      val cp = new HPath(p, keyOf(band))
+      val cp = new HPath(p, meta.chunkKey(band))
       val raw =
         try {
           val st = fs.getFileStatus(cp)
@@ -474,59 +521,97 @@ object ZarrGroup extends Serializable {
 
   // ----------------------------------------------------- consolidation --
 
-  /** Walk the group tree, fold every `.zgroup`/`.zarray`/`.zattrs`
-    * object into ONE `.zmetadata` key (zarr v2 consolidated-metadata
-    * convention: `{"zarr_consolidated_format":1,"metadata":{...}}`).
-    * Returns the number of consolidated keys. Call LAST — after every
-    * member's metadata is final. */
+  private val V2MetaFiles = Set(".zgroup", ".zarray", ".zattrs")
+
+  /** Walk the group tree and fold every metadata object into ONE key.
+    * v2 (zarr v2 consolidated-metadata convention): every
+    * `.zgroup`/`.zarray`/`.zattrs` goes into `.zmetadata` as
+    * `{"zarr_consolidated_format":1,"metadata":{<path>/<file>: …}}`. v3
+    * (a root `zarr.json`): every node's `zarr.json` goes into the root's
+    * `consolidated_metadata` (kind=inline, must_understand=false — the
+    * zarr-python convention; readers that don't know the key may ignore
+    * it). Call LAST — after every member's metadata is final. Returns
+    * the number of consolidated keys. */
   def consolidate(path: String,
                   conf: Configuration = ZarrIO.hadoopConf()): Int = {
     val (fs, root) = fsOf(path, conf)
     val mapper = new ObjectMapper()
     val metaNode = mapper.createObjectNode()
-    def walk(dir: HPath, prefix: String): Unit = {
-      fs.listStatus(dir).sortBy(_.getPath.getName).foreach { st =>
+    val top = fs.listStatus(root)
+    val v3 = top.exists(_.getPath.getName == "zarr.json")
+    def walk(listing: Array[FileStatus], prefix: String): Unit =
+      listing.sortBy(_.getPath.getName).foreach { st =>
         val name = st.getPath.getName
-        if (st.isDirectory) walk(st.getPath, s"$prefix$name/")
-        else if (name == ".zgroup" || name == ".zarray" || name == ".zattrs")
-          metaNode.set[ObjectNode](s"$prefix$name",
-            mapper.readTree(readUtf8(fs, st.getPath)))
+        def fold(key: String): Unit =
+          metaNode.set[ObjectNode](key, mapper.readTree(readUtf8(fs, st.getPath)))
+        if (st.isDirectory) walk(fs.listStatus(st.getPath), s"$prefix$name/")
+        else if (v3 && name == "zarr.json" && prefix.nonEmpty)
+          fold(prefix.stripSuffix("/"))
+        else if (!v3 && V2MetaFiles(name)) fold(s"$prefix$name")
       }
+    walk(top, "")
+    if (v3) {
+      val rootP = new HPath(root, "zarr.json")
+      val rootNode = mapper.readTree(readUtf8(fs, rootP)).asInstanceOf[ObjectNode]
+      val cm = mapper.createObjectNode()
+      cm.put("kind", "inline")
+      cm.put("must_understand", false)
+      cm.set[ObjectNode]("metadata", metaNode)
+      rootNode.set[ObjectNode]("consolidated_metadata", cm)
+      writeUtf8(fs, rootP, mapper.writeValueAsString(rootNode))
+    } else {
+      val zm = mapper.createObjectNode()
+      zm.put("zarr_consolidated_format", 1)
+      zm.set[ObjectNode]("metadata", metaNode)
+      writeUtf8(fs, new HPath(root, ".zmetadata"), mapper.writeValueAsString(zm))
     }
-    walk(root, "")
-    val top = mapper.createObjectNode()
-    top.put("zarr_consolidated_format", 1)
-    top.set[ObjectNode]("metadata", metaNode)
-    writeUtf8(fs, new HPath(root, ".zmetadata"), mapper.writeValueAsString(top))
     metaNode.size()
   }
 
-  /** The consolidated key→metadata map, if this store has one — the ONE
-    * object GET that replaces per-member probing. */
-  def consolidated(path: String, conf: Configuration = ZarrIO.hadoopConf())
-      : Option[Map[String, JsonNode]] = {
+  /** The consolidated map and the dialect it was found in: `.zmetadata`
+    * first, so opening a v2 store costs one probe, then the root
+    * `zarr.json`'s inline `consolidated_metadata`. */
+  private def consolidatedOf(path: String, conf: Configuration)
+      : Option[(Int, Map[String, JsonNode])] = {
     val (fs, p) = fsOf(path, conf)
-    val zp = new HPath(p, ".zmetadata")
-    if (!fs.exists(zp)) return None
     val mapper = new ObjectMapper()
-    val top = mapper.readTree(readUtf8(fs, zp))
-    require(top.get("zarr_consolidated_format").asInt() == 1,
-      "unsupported consolidated-metadata format")
-    val m = top.get("metadata")
-    val b = Map.newBuilder[String, JsonNode]
-    m.fieldNames().forEachRemaining(k => b += k -> m.get(k))
-    Some(b.result())
+    def fields(m: JsonNode): Map[String, JsonNode] = {
+      val b = Map.newBuilder[String, JsonNode]
+      m.fieldNames().forEachRemaining(k => b += k -> m.get(k))
+      b.result()
+    }
+    val zp = new HPath(p, ".zmetadata")
+    if (fs.exists(zp)) {
+      val top = mapper.readTree(readUtf8(fs, zp))
+      require(top.get("zarr_consolidated_format").asInt() == 1,
+        "unsupported consolidated-metadata format")
+      return Some(2 -> fields(top.get("metadata")))
+    }
+    val jp = new HPath(p, "zarr.json")
+    if (!fs.exists(jp)) return None
+    val cm = mapper.readTree(readUtf8(fs, jp)).get("consolidated_metadata")
+    if (cm == null || cm.isNull) return None
+    require(cm.get("kind").asText() == "inline",
+      "unsupported consolidated_metadata kind")
+    Some(3 -> fields(cm.get("metadata")))
   }
 
-  /** 1-D member metadata, consolidated-first: when `.zmetadata` exists
-    * the member's `.zarray` object is NEVER read (the object-store
-    * open-cost contract; the spec deletes member `.zarray`s to prove
-    * it). */
+  /** The consolidated key→metadata map, if this store has one — the ONE
+    * object GET that replaces per-member probing. Keys are v2 object
+    * paths (`obs/n/.zarray`) or v3 node paths (`obs/n`). */
+  def consolidated(path: String, conf: Configuration = ZarrIO.hadoopConf())
+      : Option[Map[String, JsonNode]] =
+    consolidatedOf(path, conf).map(_._2)
+
+  /** 1-D member metadata, consolidated-first: when the store is
+    * consolidated the member's own metadata object is NEVER read (the
+    * object-store open-cost contract; the specs delete member metadata
+    * to prove it). */
   def memberMeta1(groupPath: String, member: String,
                   conf: Configuration = ZarrIO.hadoopConf()): Zarr1Meta =
-    consolidated(groupPath, conf) match {
-      case Some(m) =>
-        val key = s"$member/.zarray"
+    consolidatedOf(groupPath, conf) match {
+      case Some((format, m)) =>
+        val key = if (format == 3) member else s"$member/.zarray"
         parse1Meta(m.getOrElse(key, throw new IllegalArgumentException(
           s"member $member not in consolidated metadata ($key missing)")))
       case None => read1Meta(s"$groupPath/$member", conf)
@@ -537,16 +622,19 @@ object ZarrGroup extends Serializable {
                   member: String): DataFrame =
     read1(spark, s"$groupPath/$member", memberMeta1(groupPath, member))
 
-  /** Member-array names of a consolidated group (keys ending
-    * `/.zarray`), sorted — the store's table of contents from the ONE
-    * `.zmetadata` GET, no listing RPCs. Requires consolidation (a
-    * non-consolidated group would need a recursive listing — the exact
-    * cost consolidation exists to avoid; fail loudly instead of hiding
-    * it). */
+  /** Member-array names of a consolidated group (v2 keys ending
+    * `/.zarray`, v3 nodes of type array), sorted — the store's table of
+    * contents from the ONE consolidated GET, no listing RPCs. Requires
+    * consolidation (a non-consolidated group would need a recursive
+    * listing — the exact cost consolidation exists to avoid; fail
+    * loudly instead of hiding it). */
   def members(path: String,
               conf: Configuration = ZarrIO.hadoopConf()): Seq[String] =
-    consolidated(path, conf) match {
-      case Some(m) => m.keys.filter(_.endsWith("/.zarray"))
+    consolidatedOf(path, conf) match {
+      case Some((3, m)) => m.collect {
+        case (k, v) if v.get("node_type").asText() == "array" => k
+      }.toSeq.sorted
+      case Some((_, m)) => m.keys.filter(_.endsWith("/.zarray"))
         .map(_.stripSuffix("/.zarray")).toSeq.sorted
       case None => throw new IllegalArgumentException(
         s"$path has no .zmetadata — consolidate() it, or address members directly")

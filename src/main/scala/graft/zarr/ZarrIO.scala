@@ -82,9 +82,22 @@ object ZarrIO {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  private def fsOf(path: String, conf: Configuration): (FileSystem, HPath) = {
+  private[zarr] def fsOf(path: String, conf: Configuration): (FileSystem, HPath) = {
     val p = new HPath(path)
     (p.getFileSystem(conf), p)
+  }
+
+  private[zarr] def writeUtf8(fs: FileSystem, p: HPath, s: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(s.getBytes("UTF-8")) finally out.close()
+  }
+
+  private[zarr] def readUtf8(fs: FileSystem, p: HPath): String = {
+    val st = fs.getFileStatus(p)
+    val raw = new Array[Byte](st.getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(0, raw) finally in.close()
+    new String(raw, "UTF-8")
   }
 
   /** Parse the store's committed metadata: v2 `.zarray` when present,
@@ -140,8 +153,7 @@ object ZarrIO {
         s""""fill_value":${meta.fillValue},"order":"C","filters":null}"""
     val (fs, p) = fsOf(path, conf)
     fs.mkdirs(p)
-    val out = fs.create(new HPath(p, ".zarray"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    writeUtf8(fs, new HPath(p, ".zarray"), json)
   }
 
   /** Chunk object name for grid cell (i, j): zarr v2 "."-joined indices;
@@ -230,6 +242,16 @@ object ZarrIO {
         s"${meta.chunkRows}x${meta.chunkCols} chunk")
     if (meta.format == 3 && meta.inner.isDefined)
       return Zarr3.writeShard(path, meta, i, j, values, conf)
+    val out = encodeChunkBytes(values, meta)
+    val (fs, _) = fsOf(path, conf)
+    val os = fs.create(chunkPath(path, meta, i, j), true)
+    try os.write(out) finally os.close()
+  }
+
+  /** dtype encode + codec pipeline of one chunk's values — the inverse
+    * of [[decodeChunkBytes]], shared by flat chunks and v3 inner chunks. */
+  private[zarr] def encodeChunkBytes(values: Array[Double],
+                                     meta: ZarrMeta): Array[Byte] = {
     val buf = ByteBuffer.allocate(values.length * meta.bytesPerElem)
       .order(ByteOrder.LITTLE_ENDIAN)
     // int dtypes validate loudly: v.toShort/.toInt silently WRAP out-of-
@@ -259,14 +281,11 @@ object ZarrIO {
         buf.putLong(asIntegral(v, Long.MinValue, Long.MaxValue)))
     }
     val bytes = buf.array()
-    val out = meta.compressor match {
+    meta.compressor match {
       case Some("zlib") => deflate(bytes)
       case Some("gzip") => gzip(bytes)
       case _ => bytes
     }
-    val (fs, _) = fsOf(path, conf)
-    val os = fs.create(chunkPath(path, meta, i, j), true)
-    try os.write(out) finally os.close()
   }
 
   private[zarr] def deflate(bytes: Array[Byte]): Array[Byte] = {

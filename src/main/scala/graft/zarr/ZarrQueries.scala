@@ -127,17 +127,24 @@ object ZarrQueries {
 
   /** One-time parquet → zarr V3 SHARDED store conversion (zarr.json,
     * c/i/j keys, sharding_indexed with gzip'd inner chunks and a
-    * crc32c-sealed end index): 128-row shards of 32-row inner chunks,
-    * so every read crosses the shard index and multi-inner assembly. */
+    * crc32c-sealed end index) through the DSv2 writer: 128-row shards
+    * of 32-row inner chunks, so every read crosses the shard index and
+    * multi-inner assembly. */
   def fixtureV3(s: SparkSession, sfDir: String): String =
     graft.tables.Fixtures.cached("zarr3", "embeddings.zarr3", sfDir) { dir =>
-      val emb = Tables.embeddings(s, sfDir)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"))
-      val dim = emb.select(size(col("vec"))).limit(1).head().getInt(0)
-      Zarr3Sink.writeMatrix(emb, dir.toString, dim,
-        shardRows = 128, innerRows = 32, gzip = true)
+      writeShardedV3(Tables.embeddings(s, sfDir)
+        .select(col("vec_id").as("row_id"),
+          transform(col("embedding"), _.cast("double")).as("vec")),
+        dir.toString)
     }()
+
+  /** The v3 fixtures' X layout: 128-row full-width shards of 32-row
+    * gzip'd inner chunks, flat at the store root (`commit=rename`). */
+  private def writeShardedV3(x: DataFrame, path: String): Unit =
+    x.write.format("zarr").option("format", 3)
+      .option("chunk_rows", 32).option("shard_rows", 128)
+      .option("commit", "rename")
+      .mode("overwrite").save(path)
 
   /** q_zarr_scan's v3 twin: same scan, same DuckDB oracle, the store a
     * v3 SHARDED one — a hash match proves zarr.json parsing, the c/i/j
@@ -180,47 +187,61 @@ object ZarrQueries {
     * to open. */
   def fixtureGroup(s: SparkSession, sfDir: String): String =
     graft.tables.Fixtures.cached("zarrgrp2", "anndata.zarr", sfDir) { dir =>
-      val emb = Tables.embeddings(s, sfDir)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"),
-          col("label"))
-      val dim = emb.select(size(col("vec"))).limit(1).head().getInt(0)
-      val nLabels = emb.agg(max(col("label"))).head.getInt(0) + 1
-      val g = dir.toString
-      // flat spec-standard layout (`commit=rename`), not the versioned
-      // store: an AnnData group is read by EXTERNAL zarr readers, which
-      // expect X/.zarray at the member root — and consolidation then
-      // carries exactly the spec keys
-      emb.select(col("id").as("row_id"), col("vec"))
-        .write.format("zarr").option("chunk_rows", 128)
-        .option("commit", "rename")
-        .mode("overwrite").save(s"$g/X")
-      ZarrGroup.write1(emb.select(col("id"), col("label").as("value")),
-        s"$g/obs/label", chunk = 100, dtype = "<i4")
-      ZarrGroup.write1(
-        emb.select(col("id"),
-          concat(lit("lab"), col("label")).as("value")),
-        s"$g/obs/label_name", chunk = 100, dtype = "|S8")
-      // AnnData categorical encoding: codes (int, -1 = NA) + categories
-      // (string dictionary) under one member sub-group with the
-      // encoding-type attr
-      ZarrGroup.write1(emb.select(col("id"), col("label").as("value")),
-        s"$g/obs/cell_type/codes", chunk = 100, dtype = "<i4")
-      ZarrGroup.write1(
-        s.range(nLabels).select(col("id"),
-          concat(lit("ct"), col("id")).as("value")),
-        s"$g/obs/cell_type/categories", chunk = 16, dtype = "|S8")
-      ZarrGroup.writeAttrs(s"$g/obs/cell_type",
-        """{"encoding-type":"categorical","ordered":false}""")
-      ZarrGroup.write1(
-        s.range(dim).select(col("id"), col("id").as("value")),
-        s"$g/var/col_id", chunk = 32, dtype = "<i8")
-      ZarrGroup.writeGroupMarker(g)
-      ZarrGroup.writeGroupMarker(s"$g/obs")
-      ZarrGroup.writeGroupMarker(s"$g/obs/cell_type")
-      ZarrGroup.writeGroupMarker(s"$g/var")
-      ZarrGroup.consolidate(g)
+      writeGroup(s, sfDir, dir.toString, format = 2)
     }()
+
+  /** The SAME logical store as [[fixtureGroup]] on the v3 dialect:
+    * per-node `zarr.json` (attributes inline), sharded X, `c/`-keyed
+    * gzip 1-D members (strings as raw-bits), inline consolidated
+    * metadata on the root LAST. */
+  def fixtureGroupV3(s: SparkSession, sfDir: String): String =
+    graft.tables.Fixtures.cached("zarrgrp3", "anndata_v3.zarr", sfDir) { dir =>
+      writeGroup(s, sfDir, dir.toString, format = 3)
+    }()
+
+  private def writeGroup(s: SparkSession, sfDir: String, g: String,
+                         format: Int): Unit = {
+    val emb = Tables.embeddings(s, sfDir)
+      .select(col("vec_id").as("id"),
+        transform(col("embedding"), _.cast("double")).as("vec"),
+        col("label"))
+    val dim = emb.select(size(col("vec"))).limit(1).head().getInt(0)
+    val nLabels = emb.agg(max(col("label"))).head.getInt(0) + 1
+    // flat spec-standard layout (`commit=rename`), not the versioned
+    // store: an AnnData group is read by EXTERNAL zarr readers, which
+    // expect X's metadata at the member root — and consolidation then
+    // carries exactly the spec keys
+    val x = emb.select(col("id").as("row_id"), col("vec"))
+    if (format == 3) writeShardedV3(x, s"$g/X")
+    else x.write.format("zarr").option("chunk_rows", 128)
+      .option("commit", "rename")
+      .mode("overwrite").save(s"$g/X")
+    ZarrGroup.write1(emb.select(col("id"), col("label").as("value")),
+      s"$g/obs/label", chunk = 100, dtype = "<i4", format = format)
+    ZarrGroup.write1(
+      emb.select(col("id"),
+        concat(lit("lab"), col("label")).as("value")),
+      s"$g/obs/label_name", chunk = 100, dtype = "|S8", format = format)
+    // AnnData categorical encoding: codes (int, -1 = NA) + categories
+    // (string dictionary) under one member sub-group with the
+    // encoding-type attr
+    ZarrGroup.write1(emb.select(col("id"), col("label").as("value")),
+      s"$g/obs/cell_type/codes", chunk = 100, dtype = "<i4", format = format)
+    ZarrGroup.write1(
+      s.range(nLabels).select(col("id"),
+        concat(lit("ct"), col("id")).as("value")),
+      s"$g/obs/cell_type/categories", chunk = 16, dtype = "|S8",
+      format = format)
+    ZarrGroup.write1(
+      s.range(dim).select(col("id"), col("id").as("value")),
+      s"$g/var/col_id", chunk = 32, dtype = "<i8", format = format)
+    ZarrGroup.writeGroupMarker(g, format = format)
+    ZarrGroup.writeGroupMarker(s"$g/obs", format = format)
+    ZarrGroup.writeGroupMarker(s"$g/obs/cell_type",
+      Some("""{"encoding-type":"categorical","ordered":false}"""), format)
+    ZarrGroup.writeGroupMarker(s"$g/var", format = format)
+    ZarrGroup.consolidate(g)
+  }
 
   /** AnnData-group read: X scanned through the unchanged DSv2 source
     * (member arrays ARE plain zarr arrays), obs/var annotation columns
@@ -232,89 +253,40 @@ object ZarrQueries {
     * proves group layout, consolidated metadata, 1-D decode (int AND
     * string), and the X chunk path agree with ground truth
     * end-to-end. */
-  def zarrAnndata(s: SparkSession, d: String): DataFrame = {
-    val g = fixtureGroup(s, d)
-    anndataRollup(s, g,
-      ZarrGroup.readMember1(s, g, "obs/label"),
-      ZarrGroup.readMember1(s, g, "obs/label_name"),
-      ZarrGroup.readCategorical(s, g, "obs/cell_type"),
-      ZarrGroup.readMember1(s, g, "var/col_id"))
-  }
-
-  /** The shared per-label rollup behind the v2 and v3 AnnData-group
-    * queries — one plan over whichever dialect's member frames, so the
-    * two formats must be result-indistinguishable (they share oracle
-    * text by design). */
-  private def anndataRollup(s: SparkSession, g: String, lab0: DataFrame,
-                            name0: DataFrame, ct0: DataFrame,
-                            vars: DataFrame): DataFrame = {
-    val x = s.read.format("zarr").load(s"$g/X")
-      .select(col("row_id"),
-        round(aggregate(col("vec"), lit(0.0), (a, b) => a + b) + lit(1e-6), 4)
-          .as("cell_sum"))
-    val lab = lab0.select(col("idx").as("row_id"), col("value").as("label"))
-    val name = name0.select(col("idx").as("row_id"),
-      col("value").as("label_name"))
-    val ct = ct0.select(col("idx").as("row_id"), col("value").as("cell_type"))
-    val nVars = vars.agg(count(lit(1)).as("n_vars"))
-    x.join(lab, "row_id").join(name, "row_id").join(ct, "row_id")
-      .groupBy("label", "label_name", "cell_type")
-      .agg(count(lit(1)).as("n_cells"),
-        round(sum("cell_sum") + lit(1e-6), 4).as("checksum"))
-      .crossJoin(broadcast(nVars))
-      .orderBy("label")
-  }
-
-  /** One-time AnnData-on-zarr-v3 GROUP fixture — the SAME logical
-    * store as [[fixtureGroup]] on the v3 dialect: per-node `zarr.json`
-    * (attributes inline), sharded X through [[Zarr3Sink]], `c/`-keyed
-    * gzip 1-D members (strings as raw-bits), inline consolidated
-    * metadata on the root LAST. */
-  def fixtureGroupV3(s: SparkSession, sfDir: String): String =
-    graft.tables.Fixtures.cached("zarrgrp3", "anndata_v3.zarr", sfDir) { dir =>
-      val emb = Tables.embeddings(s, sfDir)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"),
-          col("label"))
-      val dim = emb.select(size(col("vec"))).limit(1).head().getInt(0)
-      val nLabels = emb.agg(max(col("label"))).head.getInt(0) + 1
-      val g = dir.toString
-      Zarr3Sink.writeMatrix(emb.select(col("id"), col("vec")), s"$g/X", dim)
-      Zarr3Group.write1(emb.select(col("id"), col("label").as("value")),
-        s"$g/obs/label", chunk = 100, dtype = "<i4")
-      Zarr3Group.write1(
-        emb.select(col("id"),
-          concat(lit("lab"), col("label")).as("value")),
-        s"$g/obs/label_name", chunk = 100, dtype = "|S8")
-      Zarr3Group.write1(emb.select(col("id"), col("label").as("value")),
-        s"$g/obs/cell_type/codes", chunk = 100, dtype = "<i4")
-      Zarr3Group.write1(
-        s.range(nLabels).select(col("id"),
-          concat(lit("ct"), col("id")).as("value")),
-        s"$g/obs/cell_type/categories", chunk = 16, dtype = "|S8")
-      Zarr3Group.write1(
-        s.range(dim).select(col("id"), col("id").as("value")),
-        s"$g/var/col_id", chunk = 32, dtype = "<i8")
-      Zarr3Group.writeGroupMarker(g)
-      Zarr3Group.writeGroupMarker(s"$g/obs")
-      Zarr3Group.writeGroupMarker(s"$g/obs/cell_type",
-        Some("""{"encoding-type":"categorical","ordered":false}"""))
-      Zarr3Group.writeGroupMarker(s"$g/var")
-      Zarr3Group.consolidate(g)
-    }()
+  def zarrAnndata(s: SparkSession, d: String): DataFrame =
+    anndataRollup(s, fixtureGroup(s, d))
 
   /** `q_zarr_anndata_v3`: the v3-dialect twin of [[zarrAnndata]] —
     * same members, same rollup, `zarr.json` metadata + inline
     * consolidation + raw-bits strings + sharded X. Shares
     * q_zarr_anndata's oracle text by design: the two spec generations
     * must be result-indistinguishable. */
-  def zarrAnndataV3(s: SparkSession, d: String): DataFrame = {
-    val g = fixtureGroupV3(s, d)
-    anndataRollup(s, g,
-      Zarr3Group.readMember1(s, g, "obs/label"),
-      Zarr3Group.readMember1(s, g, "obs/label_name"),
-      Zarr3Group.readCategorical(s, g, "obs/cell_type"),
-      Zarr3Group.readMember1(s, g, "var/col_id"))
+  def zarrAnndataV3(s: SparkSession, d: String): DataFrame =
+    anndataRollup(s, fixtureGroupV3(s, d))
+
+  /** The shared per-label rollup behind the v2 and v3 AnnData-group
+    * queries — one plan over either dialect's store (the member reads
+    * detect the dialect), so the two formats must be
+    * result-indistinguishable (they share oracle text by design). */
+  private def anndataRollup(s: SparkSession, g: String): DataFrame = {
+    val x = s.read.format("zarr").load(s"$g/X")
+      .select(col("row_id"),
+        round(aggregate(col("vec"), lit(0.0), (a, b) => a + b) + lit(1e-6), 4)
+          .as("cell_sum"))
+    val lab = ZarrGroup.readMember1(s, g, "obs/label")
+      .select(col("idx").as("row_id"), col("value").as("label"))
+    val name = ZarrGroup.readMember1(s, g, "obs/label_name")
+      .select(col("idx").as("row_id"), col("value").as("label_name"))
+    val ct = ZarrGroup.readCategorical(s, g, "obs/cell_type")
+      .select(col("idx").as("row_id"), col("value").as("cell_type"))
+    val nVars = ZarrGroup.readMember1(s, g, "var/col_id")
+      .agg(count(lit(1)).as("n_vars"))
+    x.join(lab, "row_id").join(name, "row_id").join(ct, "row_id")
+      .groupBy("label", "label_name", "cell_type")
+      .agg(count(lit(1)).as("n_cells"),
+        round(sum("cell_sum") + lit(1e-6), 4).as("checksum"))
+      .crossJoin(broadcast(nVars))
+      .orderBy("label")
   }
 
   val queries: Map[String, Q] = Map(

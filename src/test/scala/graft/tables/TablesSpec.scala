@@ -88,4 +88,18 @@ class TablesSpec extends SparkSpec {
     assert(Tables.lineitem(spark, sf).schema("l_shipdate").dataType == TimestampNTZType)
     assert(Tables.orders(spark, sf).schema("o_orderdate").dataType == TimestampNTZType)
   }
+
+  test("a data dir whose name holds glob metacharacters is read literally") {
+    // `"`, `\` and `[1]`: the reader must not parse the dir as a pattern
+    val dir = new java.io.File(tmp(), "a\"b\\c[1]")
+    assert(dir.mkdir())
+    Seq("nation", "region").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, s"$t.parquet"),
+        dir.toPath.resolve(s"$t.parquet"))
+    }
+    val got = graft.Graft.run("q_join_broadcast", spark, dir.toString).collect()
+    assert(got.nonEmpty)
+    assert(got.toSeq ==
+      graft.Graft.run("q_join_broadcast", spark, sf).collect().toSeq)
+  }
 }

@@ -12,6 +12,15 @@ class Zarr3Spec extends SparkSpec {
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"zarr3_$tag").toString
 
+  /** (id, vec) through the DSv2 writer as a flat sharded v3 store. */
+  private def writeSharded(df: org.apache.spark.sql.DataFrame, path: String,
+                           shardRows: Int, innerRows: Int): Unit =
+    df.select(col("id").as("row_id"), col("vec"))
+      .write.format("zarr")
+      .option("chunk_rows", innerRows).option("shard_rows", shardRows)
+      .option("format", 3).option("commit", "rename")
+      .mode("overwrite").save(path)
+
   private def embeddings =
     graft.tables.Tables.embeddings(spark, sf)
       .select(col("vec_id").as("id"),
@@ -19,8 +28,8 @@ class Zarr3Spec extends SparkSpec {
 
   test("v3 sharded round trip: write -> DSv2 read == original") {
     val df = embeddings
-    val path = tmpDir("rt")
-    Zarr3Sink.writeMatrix(df, path, dim = 64, shardRows = 16, innerRows = 4)
+    val path = tmpDir("rt") + "/s.zarr"
+    writeSharded(df, path, shardRows = 16, innerRows = 4)
     val meta = ZarrIO.readMeta(path)
     assert(meta.format == 3 && meta.inner.contains(ShardSpec(4, 64)))
     val back = spark.read.format("zarr").load(path)
@@ -33,9 +42,9 @@ class Zarr3Spec extends SparkSpec {
 
   test("v3 == v2: same data through either store generation") {
     val df = embeddings
-    val p2 = tmpDir("v2"); val p3 = tmpDir("v3")
+    val p2 = tmpDir("v2"); val p3 = tmpDir("v3") + "/s.zarr"
     ZarrSink.writeMatrix(df, p2, dim = 64, chunkRows = 16)
-    Zarr3Sink.writeMatrix(df, p3, dim = 64, shardRows = 16, innerRows = 8)
+    writeSharded(df, p3, shardRows = 16, innerRows = 8)
     val r2 = spark.read.format("zarr").load(p2)
     val r3 = spark.read.format("zarr").load(p3)
     assert(r2.join(r3.withColumnRenamed("vec", "vec3"), Seq("row_id"))
@@ -208,8 +217,8 @@ class Zarr3Spec extends SparkSpec {
 
   test("v3 pruning: row_id range keeps only intersecting shards") {
     val df = embeddings
-    val path = tmpDir("prune")
-    Zarr3Sink.writeMatrix(df, path, dim = 64, shardRows = 16, innerRows = 4)
+    val path = tmpDir("prune") + "/s.zarr"
+    writeSharded(df, path, shardRows = 16, innerRows = 4)
     val pruned = spark.read.format("zarr").load(path)
       .filter(col("row_id") >= 20 && col("row_id") < 40)
     val parts = pruned.rdd.getNumPartitions

@@ -123,6 +123,27 @@ class ZarrSpec extends SparkSpec {
     }
   }
 
+  test("int dtypes reject out-of-range and fractional values, flat and sharded") {
+    val flat = ZarrMeta(rows = 2, cols = 2, chunkRows = 2, chunkCols = 2,
+      dtype = "<i2", compressor = Some("zlib"), fillValue = 0.0)
+    val sharded = ZarrMeta(rows = 4, cols = 2, chunkRows = 4, chunkCols = 2,
+      dtype = "<i2", compressor = Some("gzip"), fillValue = 0.0,
+      format = 3, sep = "/", inner = Some(ShardSpec(2, 2)))
+    for (meta <- Seq(flat, sharded);
+         (bad, msg) <- Seq(40000.0 -> "out of range", 1.5 -> "non-integral")) {
+      val path = tmpDir("intbad")
+      val vals = Array.fill(meta.chunkRows * meta.chunkCols)(7.0)
+      vals(0) = bad
+      val e = intercept[IllegalArgumentException] {
+        ZarrIO.writeChunk(path, meta, 0, 0, vals)
+      }
+      assert(e.getMessage.contains(msg), e.getMessage)
+      // the check runs before the chunk object is created
+      assert(!new java.io.File(
+        ZarrIO.chunkPath(path, meta, 0, 0).toUri.getPath).exists())
+    }
+  }
+
   test("chunk I/O works against an explicit file:// FS URI (Hadoop FS seam)") {
     // same store driven through a scheme-qualified URI: proves every I/O
     // call resolves the FileSystem from the path (the object-store seam)
